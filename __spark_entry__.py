@@ -1754,6 +1754,9 @@ def q_kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
       * the tree is built with selectExpr (one parse JVM-side) — the
         equivalent Column-API build paid ~0.2s of py4j round trips per
         invocation, comparable to the query's own runtime."""
+    # the terms are spliced into SQL text unescaped: admit only [a-z]+
+    bad = [t for t in KG_TERMS if not (t.isascii() and t.isalpha() and t.islower())]
+    assert not bad, f"KG_TERMS must be quote-free [a-z]+ words: {bad!r}"
     docs = _t(spark, sf_dir, "documents")
     terms_sql = "array(" + ",".join(f"'{t}'" for t in KG_TERMS) + ")"
     ts_sql = (

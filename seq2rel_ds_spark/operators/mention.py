@@ -12,12 +12,20 @@ only small typed rows flow on.
 
 Offsets are document-level character spans (sentence start + in-sentence
 match span) so downstream ordering matches the parse path's semantics.
+
+The fused flagship kernel (``make_triple_partial_processor`` /
+``make_relation_processor``) chooses its word-boundary mode per document:
+an ASCII text is scanned with ``re.ASCII`` patterns and a ``str.find`` cue
+loop, any other text with the Unicode patterns.  On ASCII text ``\\b``
+matches the same positions in both modes, so the output is that of the
+Unicode scan on every input.
 """
 
 from __future__ import annotations
 
 import re
 from bisect import bisect_right
+from functools import cache
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -46,47 +54,6 @@ def _sent_bounds(text: str) -> list:
     return [m.end() for m in _SENT_BOUND_FAST.finditer(text)]
 
 
-def _make_cue_scanner(preds: dict, ascii_boundaries: bool):
-    """text -> [(start, word)] sorted by position, equal to the cue regex's
-    finditer output.
-
-    Fast path (all cues are ASCII \\w+ and ascii_boundaries): one C-level
-    str.find() loop per cue word with manual \\b neighbor checks — measured
-    2.8x faster than the \\b(alt|...)\\b regex scan.  Equivalence: a
-    \\b-delimited match spans a complete token, so matches of distinct
-    whole words never overlap and position-sorting reproduces finditer
-    order; the i+1 step cannot skip a valid match because a new \\b match
-    cannot start inside the word-char run just matched.  Falls back to the
-    regex scanner for non-word cues (spaces, punctuation) or unicode
-    boundary semantics."""
-    cue_pat = _compile_cue_pattern(preds, ascii_boundaries=ascii_boundaries)
-    words = sorted(preds)
-    if not ascii_boundaries or not all(
-        w and all(ch in _ASCII_WORD for ch in w) for w in words
-    ):
-        def scan_regex(text: str) -> list:
-            return [(c.start(), c.group(0)) for c in cue_pat.finditer(text)]
-
-        return scan_regex
-
-    def scan_find(text: str) -> list:
-        out = []
-        n = len(text)
-        find = text.find
-        for w in words:
-            lw = len(w)
-            i = find(w)
-            while i >= 0:
-                if (i == 0 or text[i - 1] not in _ASCII_WORD) and (
-                    i + lw == n or text[i + lw] not in _ASCII_WORD
-                ):
-                    out.append((i, w))
-                i = find(w, i + 1)
-        out.sort()
-        return out
-
-    return scan_find
-
 SCAN_SCHEMA = (
     "url string, sent_idx int, sent_start int, start int, end int, "
     "kind string, token string"
@@ -95,8 +62,14 @@ SCAN_SCHEMA = (
 MENTION_COLUMNS = ["url", "sent_idx", "sent_start", "start", "end", "surface"]
 
 
-def _compile_dictionary(surfaces: List[str], ascii_boundaries: bool = False) -> "re.Pattern":
-    """Trie-compressed alternation over the surface dictionary.
+def _compile_dictionary(surfaces: List[str]) -> "re.Pattern":
+    """Trie-compressed alternation over the surface dictionary (Unicode
+    ``\\b``; see ``_dictionary_regex``)."""
+    return re.compile(_dictionary_regex(surfaces))
+
+
+def _dictionary_regex(surfaces: List[str]) -> str:
+    """Source of the trie-compressed alternation over the surface dictionary.
 
     A flat longest-first alternation re-scans every alternative at every
     text position; sharing prefixes in a trie makes the match walk each
@@ -109,11 +82,11 @@ def _compile_dictionary(surfaces: List[str], ascii_boundaries: bool = False) -> 
     can never match at the same position.  Equivalence is pinned by the
     fused-scan parity tests.
 
-    ``ascii_boundaries=True`` compiles with ``re.ASCII`` so ``\\b`` tests
-    ASCII word chars only — measured ~27%% faster scanning and
-    match-identical whenever the corpus is ASCII (the synthetic bench
-    corpus is, by construction).  Leave False for corpora that may contain
-    non-ASCII word characters adjacent to dictionary hits.
+    Word-boundary mode is chosen per document, not per corpus: the fused
+    kernel compiles this source with ``re.ASCII`` for ASCII documents
+    (measured ~30% faster scanning; ``\\b`` matches the same positions on
+    ASCII text in both modes) and without it, on first need, for any other
+    document.
 
     Alternatives evaluated and rejected (same 20k-doc measurement):
     a pure-Python token-level phrase matcher (Aho-Corasick at word
@@ -159,24 +132,76 @@ def _compile_dictionary(surfaces: List[str], ascii_boundaries: bool = False) -> 
             body = "(?:" + body + ")?"
         pats[id(node)] = body
 
-    return re.compile(
-        r"\b(" + pats[id(trie)] + r")\b", re.ASCII if ascii_boundaries else 0
-    )
+    return r"\b(" + pats[id(trie)] + r")\b"
 
 
-def _compile_cue_pattern(words, ascii_boundaries: bool = False) -> "re.Pattern":
-    """Cue-word alternation with the same no-sentence-boundary guarantee the
-    dictionary pattern enforces (the single-pass scanner depends on it)."""
+def _compile_cue_pattern(words) -> "re.Pattern":
+    """Cue-word alternation (Unicode ``\\b``; see ``_cue_regex``)."""
+    return re.compile(_cue_regex(words))
+
+
+def _cue_regex(words) -> str:
+    """Source of the cue-word alternation, with the same no-sentence-boundary
+    guarantee the dictionary pattern enforces (the single-pass scanner
+    depends on it)."""
     for w in words:
         if _SENT_SPLIT.search(w):
             raise ValueError(
                 f"predicate cue {w!r} contains a sentence boundary; the "
                 "single-pass scanner would match it across sentences"
             )
-    return re.compile(
-        r"\b(" + "|".join(re.escape(w) for w in sorted(words)) + r")\b",
-        re.ASCII if ascii_boundaries else 0,
-    )
+    return r"\b(" + "|".join(re.escape(w) for w in sorted(words)) + r")\b"
+
+
+def _make_cue_scanner(preds: dict):
+    """text -> [(start, word)] sorted by position, equal to the Unicode cue
+    regex's finditer output on every text.
+
+    Word-boundary mode is chosen per document.  An ASCII text, on which
+    ``\\b`` matches the same positions in ASCII and Unicode mode, takes the
+    fast path when every cue is an ASCII ``\\w+`` word: one C-level
+    str.find() loop per cue word with manual ``\\b`` neighbor checks —
+    measured ~6x faster than the Unicode regex scan.  Equivalence: a
+    ``\\b``-delimited match spans a complete token, so matches of distinct
+    whole words never overlap and position-sorting reproduces finditer
+    order; the i+1 step cannot skip a valid match because a new ``\\b``
+    match cannot start inside the word-char run just matched.  Other cue
+    sets scan ASCII text with the ``re.ASCII`` regex.  Any other text takes
+    the Unicode regex, compiled when the first such document arrives."""
+    src = _cue_regex(preds)
+    words = sorted(preds)
+    unicode_pat = cache(lambda: re.compile(src))
+
+    if all(w and all(ch in _ASCII_WORD for ch in w) for w in words):
+
+        def scan_ascii(text: str) -> list:
+            out = []
+            n = len(text)
+            find = text.find
+            for w in words:
+                lw = len(w)
+                i = find(w)
+                while i >= 0:
+                    if (i == 0 or text[i - 1] not in _ASCII_WORD) and (
+                        i + lw == n or text[i + lw] not in _ASCII_WORD
+                    ):
+                        out.append((i, w))
+                    i = find(w, i + 1)
+            out.sort()
+            return out
+
+    else:
+        ascii_pat = re.compile(src, re.ASCII)
+
+        def scan_ascii(text: str) -> list:
+            return [(c.start(), c.group(0)) for c in ascii_pat.finditer(text)]
+
+    def scan(text: str) -> list:
+        if text.isascii():
+            return scan_ascii(text)
+        return [(c.start(), c.group(0)) for c in unicode_pat().finditer(text)]
+
+    return scan
 
 
 def _scan_doc(
@@ -311,36 +336,112 @@ RELATION_SCAN_SCHEMA = (
 )
 
 
-def make_relation_processor(
-    dict_rows: List[tuple], predicates: Dict[str, str], ascii_boundaries: bool = False
-):
-    """Per-batch relation-scan body shared by BOTH scan paths (JVM parquet ->
-    mapInPandas, and the Arrow-native pyarrow source): pandas frame of
-    (url, html) -> iterator of relation frames.  Compiled state (dictionary,
-    patterns) is built once per call — callers construct the processor once
-    per task/partition, not per batch."""
+def _make_doc_relations(dict_rows: List[tuple], predicates: Dict[str, str]):
+    """Per-document body of both fused processors: extracted text ->
+    [(sent_idx, subj_uid, pred, obj_uid)], one per cue that has a subject
+    and an object in its sentence, in cue order — equal to
+    ``select_relations(link_doc_mentions(mentions), cues)`` over the
+    Unicode ``_scan_doc`` of the text.
+
+    * Word-boundary mode per document: ASCII text is scanned with the
+      ``re.ASCII`` dictionary pattern and the find-based cue scanner, any
+      other text with the Unicode patterns (compiled on first need).
+    * Cue scan first: a cue-free doc can emit nothing, so the sentence-bound
+      regex and the dictionary scan are skipped for it.  The win is on real
+      webtext, where most pages mention no relation cue at all.
+    * Only the sentences that hold a cue are scanned for mentions: a
+      relation's subject and object lie in its cue's sentence, and an
+      unambiguous mention's uid does not depend on the rest of the doc.
+      ``finditer(text, lo, hi)`` over one sentence yields exactly the
+      full-text matches inside it: no match crosses a sentence boundary
+      (``_dictionary_regex`` rejects such surfaces), ``\\b`` at ``lo``
+      sees the real preceding character, and no match ends at ``hi`` in
+      either view: it would end in the boundary's whitespace run, and a
+      surface can neither start inside that run (no ``\\b`` there) nor
+      contain the '.' and whitespace before it (rejected).
+    * Relations by position.  One sentence's mentions come from one
+      ``finditer``, so they never overlap and their starts and ends both
+      strictly increase.  The subject of a cue (max end <= cue) is then the
+      last mention with end <= cue and the object (min start > cue) the
+      first with start > cue — two bisects, and a uid lookup for the two
+      chosen mentions only.  The uid tie-breaks of ``select_relations``
+      never fire: no two mentions share an end or a start.
+    * An ambiguous surface in a cue's sentence sends the doc down the
+      linker path over every mention, since label coherence counts them
+      all.  So does the empty surface, whose zero-width matches can share
+      an end with the mention before them.
+    """
     from seq2rel_ds_spark.core.link import (
         build_dictionary,
         make_doc_linker,
         select_relations,
     )
-    from seq2rel_ds_spark.operators.extract import extract_text_from_html
 
     dictionary = build_dictionary(dict_rows)
-    pat = _compile_dictionary(list(dictionary), ascii_boundaries=ascii_boundaries)
     preds = dict(predicates)
-    cue_pat = _compile_cue_pattern(preds, ascii_boundaries=ascii_boundaries)
+    if not preds:
+        return lambda text: []
+    src = _dictionary_regex(list(dictionary))
+    ascii_pat = re.compile(src, re.ASCII)
+    unicode_pat = cache(lambda: re.compile(src))
+    cue_scan = _make_cue_scanner(preds)
+    uid_of = {s: c[0][0] for s, c in dictionary.items() if len(c) == 1}
+    needs_link = frozenset(s for s, c in dictionary.items() if len(c) > 1 or not s)
     link_doc = make_doc_linker(dictionary)
+
+    def linked_relations(text, pat, bounds, hits):
+        mentions = [
+            (bisect_right(bounds, m.start()), m.start(), m.end(), m.group(0))
+            for m in pat.finditer(text)
+        ]
+        cues = [(bisect_right(bounds, c), c, preds[w]) for c, w in hits]
+        return select_relations(link_doc(mentions), cues)
+
+    def relations(text: str) -> list:
+        hits = cue_scan(text)
+        if not hits:
+            return []
+        pat = ascii_pat if text.isascii() else unicode_pat()
+        bounds = _sent_bounds(text)
+        out = []
+        sent = -1
+        for c, w in hits:
+            si = bisect_right(bounds, c)
+            if si != sent:  # first cue of its sentence: scan that sentence
+                sent = si
+                starts, ends, surfaces = [], [], []
+                lo = bounds[si - 1] if si else 0
+                hi = bounds[si] if si < len(bounds) else len(text)
+                for m in pat.finditer(text, lo, hi):
+                    s, e = m.span()
+                    starts.append(s)
+                    ends.append(e)
+                    surfaces.append(m.group(0))
+                if not needs_link.isdisjoint(surfaces):
+                    return linked_relations(text, pat, bounds, hits)
+            i = bisect_right(ends, c) - 1  # last mention ending at or before c
+            j = bisect_right(starts, c)  # first mention starting after c
+            if i >= 0 and j < len(starts):
+                out.append((si, uid_of[surfaces[i]], preds[w], uid_of[surfaces[j]]))
+        return out
+
+    return relations
+
+
+def make_relation_processor(dict_rows: List[tuple], predicates: Dict[str, str]):
+    """Per-batch relation-scan body shared by BOTH scan paths (JVM parquet ->
+    mapInPandas, and the Arrow-native pyarrow source): pandas frame of
+    (url, html) -> iterator of relation frames.  Compiled state (dictionary,
+    patterns) is built once per call — callers construct the processor once
+    per task/partition, not per batch."""
+    from seq2rel_ds_spark.operators.extract import extract_text_from_html
+
+    relations = _make_doc_relations(dict_rows, predicates)
 
     def process(pdf: pd.DataFrame):
         out = {k: [] for k in ("url", "sent_idx", "subj_uid", "pred", "obj_uid")}
         for url, html in zip(pdf["url"], pdf["html"]):
-            text = extract_text_from_html(bytes(html))
-            raw_mentions, raw_cues = _scan_doc(text, pat, cue_pat)
-            mentions = [(si, s, e, tok) for si, _ss, s, e, tok in raw_mentions]
-            cues = [(si, s, preds[w]) for si, _ss, s, _e, w in raw_cues]
-            linked = link_doc(mentions)
-            for sent_idx, subj, pred, obj in select_relations(linked, cues):
+            for sent_idx, subj, pred, obj in relations(extract_text_from_html(bytes(html))):
                 out["url"].append(url)
                 out["sent_idx"].append(sent_idx)
                 out["subj_uid"].append(subj)
@@ -354,9 +455,7 @@ def make_relation_processor(
 TRIPLE_PARTIAL_SCHEMA = "subj_uid string, pred string, obj_uid string, cnt long"
 
 
-def make_triple_partial_processor(
-    dict_rows: List[tuple], predicates: Dict[str, str], ascii_boundaries: bool = False
-):
+def make_triple_partial_processor(dict_rows: List[tuple], predicates: Dict[str, str]):
     """Like ``make_relation_processor`` but with MAP-SIDE COMBINE fused into
     the scan task: each batch emits per-(subj, pred, obj) partial COUNTS
     instead of one row per relation instance.
@@ -371,53 +470,21 @@ def make_triple_partial_processor(
     Parity with the instance-row path is pinned by
     tests/operators/test_fused_scan.py (identical triples AND n_support).
 
-    The loop is direct (no per-instance rows, no intermediate frame): cue
-    scan first — a document with no predicate cue can emit no relation, so
-    the heavier dictionary scan and the linker are skipped for it — then
-    mentions in link-ready form, counts accumulated in place.  ~15%
-    measured over wrapping the instance-row processor.
+    Counts accumulate in place, with no per-instance rows or intermediate
+    frame.  Counter.update over a generator was tried for the count loop
+    and REJECTED: measured ~0.85x (a generator frame per instance costs
+    more than the plain loop's C-level dict __setitem__).
     """
     from collections import Counter
 
-    from seq2rel_ds_spark.core.link import (
-        build_dictionary,
-        make_doc_linker,
-        select_relations,
-    )
     from seq2rel_ds_spark.operators.extract import extract_text_from_html
 
-    dictionary = build_dictionary(dict_rows)
-    pat = _compile_dictionary(list(dictionary), ascii_boundaries=ascii_boundaries)
-    preds = dict(predicates)
-    cue_scan = _make_cue_scanner(preds, ascii_boundaries)
-    link_doc = make_doc_linker(dictionary)
+    relations = _make_doc_relations(dict_rows, predicates)
 
     def process(pdf: pd.DataFrame):
         counts: Counter = Counter()
         for html in pdf["html"]:
-            text = extract_text_from_html(bytes(html))
-            # cue scan FIRST: a cue-free doc can emit nothing, so the
-            # sentence-bound regex and the dictionary scan are skipped
-            # entirely for it (the cue scan is the cheapest of the three).
-            # Neutral on the synthetic bench corpus (0 cue-free docs) —
-            # the win is on real webtext, where most pages mention no
-            # relation cue at all.  Counter.update over a generator was
-            # also tried for the per-instance count loop and REJECTED:
-            # measured ~0.85x (generator frame per instance beats the
-            # plain loop's C-level dict __setitem__ in the wrong
-            # direction).
-            hits = cue_scan(text)
-            if not hits:
-                continue
-            bounds = _sent_bounds(text)
-            cues = [(bisect_right(bounds, s), s, preds[w]) for s, w in hits]
-            mentions = []
-            ap = mentions.append
-            for m in pat.finditer(text):
-                s, e = m.span()
-                ap((bisect_right(bounds, s), s, e, m.group(0)))
-            linked = link_doc(mentions)
-            for _sent, subj, pred, obj in select_relations(linked, cues):
+            for _sent, subj, pred, obj in relations(extract_text_from_html(bytes(html))):
                 counts[(subj, pred, obj)] += 1
         keys = list(counts)
         yield pd.DataFrame(
@@ -436,19 +503,17 @@ def fused_triple_partials(
     pages: DataFrame,
     dictionary_rows: List[tuple],
     predicates: Dict[str, str],
-    ascii_boundaries: bool = False,
 ) -> DataFrame:
     """JVM-scan variant of the fused-combine flagship stage: parquet scan ->
     ONE Arrow pass doing extract+scan+link+select+partial-aggregate.  Output
     rows are (subj_uid, pred, obj_uid, cnt) partials; feed to
     ``canonicalize_from_partials``."""
     bc = pages.sparkSession.sparkContext.broadcast(
-        (list(dictionary_rows), dict(predicates), bool(ascii_boundaries))
+        (list(dictionary_rows), dict(predicates))
     )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dict_rows, preds, ascii_b = bc.value
-        process = make_triple_partial_processor(dict_rows, preds, ascii_boundaries=ascii_b)
+        process = make_triple_partial_processor(*bc.value)
         for pdf in batches:
             yield from process(pdf)
 
@@ -460,7 +525,6 @@ def fused_triple_partials_arrow(
     pages_path: str,
     dictionary_rows: List[tuple],
     predicates: Dict[str, str],
-    ascii_boundaries: bool = False,
     batch_size: int = 20000,
 ) -> DataFrame:
     """Arrow-native + fused-combine flagship stage (the bench default):
@@ -471,18 +535,13 @@ def fused_triple_partials_arrow(
     O(distinct-triples x tasks) skinny rows."""
     from seq2rel_ds_spark.sources.arrow_pages import scan_parquet_python
 
-    bc = spark.sparkContext.broadcast(
-        (list(dictionary_rows), dict(predicates), bool(ascii_boundaries))
-    )
+    bc = spark.sparkContext.broadcast((list(dictionary_rows), dict(predicates)))
 
     state: dict = {}  # one compiled processor per worker process
 
     def process(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         if "proc" not in state:
-            dict_rows, preds, ascii_b = bc.value
-            state["proc"] = make_triple_partial_processor(
-                dict_rows, preds, ascii_boundaries=ascii_b
-            )
+            state["proc"] = make_triple_partial_processor(*bc.value)
         yield from state["proc"](pdf)
 
     return scan_parquet_python(
@@ -499,7 +558,6 @@ def fused_relation_scan(
     pages: DataFrame,
     dictionary_rows: List[tuple],
     predicates: Dict[str, str],
-    ascii_boundaries: bool = False,
 ) -> DataFrame:
     """The whole doc-local half of the KG pipeline in ONE Arrow pass:
     html -> text -> sentence scan -> dictionary+coherence linking ->
@@ -515,20 +573,12 @@ def fused_relation_scan(
     shipped via ``SparkContext.broadcast`` (once per executor; the task
     closure carries only the broadcast handle).
     """
-    from seq2rel_ds_spark.core.link import (
-        build_dictionary,
-        link_doc_mentions,
-        select_relations,
-    )
-    from seq2rel_ds_spark.operators.extract import extract_text_from_html
-
     bc = pages.sparkSession.sparkContext.broadcast(
-        (list(dictionary_rows), dict(predicates), bool(ascii_boundaries))
+        (list(dictionary_rows), dict(predicates))
     )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dict_rows, preds, ascii_b = bc.value
-        process = make_relation_processor(dict_rows, preds, ascii_boundaries=ascii_b)
+        process = make_relation_processor(*bc.value)
         for pdf in batches:
             yield from process(pdf)
 
@@ -540,7 +590,6 @@ def fused_relation_scan_arrow(
     pages_path: str,
     dictionary_rows: List[tuple],
     predicates: Dict[str, str],
-    ascii_boundaries: bool = False,
     batch_size: int = 20000,
 ) -> DataFrame:
     """The flagship scan over the Arrow-native parquet source: Python
@@ -550,18 +599,13 @@ def fused_relation_scan_arrow(
     sources/arrow_pages.py for when this path wins and what it gives up."""
     from seq2rel_ds_spark.sources.arrow_pages import scan_parquet_python
 
-    bc = spark.sparkContext.broadcast(
-        (list(dictionary_rows), dict(predicates), bool(ascii_boundaries))
-    )
+    bc = spark.sparkContext.broadcast((list(dictionary_rows), dict(predicates)))
 
     state: dict = {}  # one compiled processor per worker process
 
     def process(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         if "proc" not in state:
-            dict_rows, preds, ascii_b = bc.value
-            state["proc"] = make_relation_processor(
-                dict_rows, preds, ascii_boundaries=ascii_b
-            )
+            state["proc"] = make_relation_processor(*bc.value)
         yield from state["proc"](pdf)
 
     return scan_parquet_python(

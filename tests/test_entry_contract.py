@@ -26,6 +26,14 @@ def test_registry_keys_match():
     assert set(em.queries()) == set(em.oracle_sql())
 
 
+def test_kg_terms_guard_rejects_sql_quotes(monkeypatch):
+    """KG_TERMS are spliced unescaped into selectExpr text; a term that is
+    not a plain lowercase word fails before any SQL is built."""
+    monkeypatch.setattr(em, "KG_TERMS", em.KG_TERMS + ["it's"])
+    with pytest.raises(AssertionError, match="it's"):
+        em.q_kg_cooccurrence(None, SF)
+
+
 def test_every_query_analyzes(spark):
     for name, fn in em.queries().items():
         df = fn(spark, SF)
