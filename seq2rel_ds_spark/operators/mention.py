@@ -157,50 +157,51 @@ def _make_cue_scanner(preds: dict):
     """text -> [(start, word)] sorted by position, equal to the Unicode cue
     regex's finditer output on every text.
 
-    Word-boundary mode is chosen per document.  An ASCII text, on which
-    ``\\b`` matches the same positions in ASCII and Unicode mode, takes the
-    fast path when every cue is an ASCII ``\\w+`` word: one C-level
+    When every cue is an ASCII ``\\w+`` word, word-boundary mode is chosen
+    per document.  An ASCII text, on which ``\\b`` matches the same
+    positions in ASCII and Unicode mode, takes ``scan_find``: one C-level
     str.find() loop per cue word with manual ``\\b`` neighbor checks —
     measured ~6x faster than the Unicode regex scan.  Equivalence: a
     ``\\b``-delimited match spans a complete token, so matches of distinct
     whole words never overlap and position-sorting reproduces finditer
     order; the i+1 step cannot skip a valid match because a new ``\\b``
-    match cannot start inside the word-char run just matched.  Other cue
-    sets scan ASCII text with the ``re.ASCII`` regex.  Any other text takes
-    the Unicode regex, compiled when the first such document arrives."""
+    match cannot start inside the word-char run just matched.  Any other
+    text takes the Unicode regex, compiled when the first such document
+    arrives.  Any other cue set takes the Unicode regex on every text.
+
+    The returned scanner's ``ascii_path`` attribute is the function it
+    applies to ASCII text (``scan_find`` or ``scan_regex``)."""
     src = _cue_regex(preds)
     words = sorted(preds)
     unicode_pat = cache(lambda: re.compile(src))
 
-    if all(w and all(ch in _ASCII_WORD for ch in w) for w in words):
-
-        def scan_ascii(text: str) -> list:
-            out = []
-            n = len(text)
-            find = text.find
-            for w in words:
-                lw = len(w)
-                i = find(w)
-                while i >= 0:
-                    if (i == 0 or text[i - 1] not in _ASCII_WORD) and (
-                        i + lw == n or text[i + lw] not in _ASCII_WORD
-                    ):
-                        out.append((i, w))
-                    i = find(w, i + 1)
-            out.sort()
-            return out
-
-    else:
-        ascii_pat = re.compile(src, re.ASCII)
-
-        def scan_ascii(text: str) -> list:
-            return [(c.start(), c.group(0)) for c in ascii_pat.finditer(text)]
-
-    def scan(text: str) -> list:
-        if text.isascii():
-            return scan_ascii(text)
+    def scan_regex(text: str) -> list:
         return [(c.start(), c.group(0)) for c in unicode_pat().finditer(text)]
 
+    if not all(w and all(ch in _ASCII_WORD for ch in w) for w in words):
+        scan_regex.ascii_path = scan_regex
+        return scan_regex
+
+    def scan_find(text: str) -> list:
+        out = []
+        n = len(text)
+        find = text.find
+        for w in words:
+            lw = len(w)
+            i = find(w)
+            while i >= 0:
+                if (i == 0 or text[i - 1] not in _ASCII_WORD) and (
+                    i + lw == n or text[i + lw] not in _ASCII_WORD
+                ):
+                    out.append((i, w))
+                i = find(w, i + 1)
+        out.sort()
+        return out
+
+    def scan(text: str) -> list:
+        return scan_find(text) if text.isascii() else scan_regex(text)
+
+    scan.ascii_path = scan_find
     return scan
 
 
@@ -368,8 +369,10 @@ def _make_doc_relations(dict_rows: List[tuple], predicates: Dict[str, str]):
       never fire: no two mentions share an end or a start.
     * An ambiguous surface in a cue's sentence sends the doc down the
       linker path over every mention, since label coherence counts them
-      all.  So does the empty surface, whose zero-width matches can share
-      an end with the mention before them.
+      all.  So does an empty match, whose zero-width span can share an end
+      with the mention before it.  The pattern yields them when "" is a
+      dictionary surface, and at every word boundary when the dictionary
+      is empty (the linker then drops them as unknown surfaces).
     """
     from seq2rel_ds_spark.core.link import (
         build_dictionary,
@@ -386,7 +389,7 @@ def _make_doc_relations(dict_rows: List[tuple], predicates: Dict[str, str]):
     unicode_pat = cache(lambda: re.compile(src))
     cue_scan = _make_cue_scanner(preds)
     uid_of = {s: c[0][0] for s, c in dictionary.items() if len(c) == 1}
-    needs_link = frozenset(s for s, c in dictionary.items() if len(c) > 1 or not s)
+    needs_link = frozenset(s for s, c in dictionary.items() if len(c) > 1) | {""}
     link_doc = make_doc_linker(dictionary)
 
     def linked_relations(text, pat, bounds, hits):

@@ -1,7 +1,7 @@
 """Equivalence of the cue scanner used inside the flagship's fused
-processors with the Unicode \\b-regex scanner, on every text: the scanner
-picks ASCII word boundaries (find() loop or re.ASCII regex) per document
-only when the document is ASCII."""
+processors with the Unicode \\b-regex scanner, on every text: for ASCII
+word cues the scanner takes the find() loop on ASCII documents only; any
+other cue set takes the Unicode regex on every document."""
 
 import re
 
@@ -34,6 +34,7 @@ TEXTS = [
 def test_fast_path_matches_regex():
     preds = {"treats": "TREATS", "causes": "CAUSES", "treat": "TREAT"}
     scan = _make_cue_scanner(preds)
+    assert scan.ascii_path.__name__ == "scan_find"
     for t in TEXTS:
         assert scan(t) == _regex_scan(preds, t) == _regex_scan(preds, t, re.ASCII), t
 
@@ -41,6 +42,7 @@ def test_fast_path_matches_regex():
 def test_non_word_cues_fall_back_to_regex():
     preds = {"linked to": "LINKED", "co-occurs": "COOCCURS"}
     scan = _make_cue_scanner(preds)
+    assert scan.ascii_path.__name__ == "scan_regex"
     for t in ("a linked to b, co-occurs with c; linked tox.", "élinked to b co-occursé"):
         assert scan(t) == _regex_scan(preds, t), t
 

@@ -161,6 +161,14 @@ def test_named_cases_equal_reference():
     _check([_html(c) for c in cases], DICT_ROWS + [EMPTY_ROW])
 
 
+def test_empty_dictionary_yields_no_relations():
+    """An empty dictionary compiles to a pattern that matches the empty
+    string at every word boundary; no such match has a uid, so no doc gets
+    a relation, cues or not."""
+    docs = [["vexanib0 causes cardiosis treats vexa-0."], ["é causes écauses."], ["x."]]
+    assert _check([_html(c) for c in docs], []) == []
+
+
 def test_non_ascii_doc_takes_unicode_boundaries():
     """'é' is a word char to a Unicode \\b only.  In 'vexanib0é' and
     'écauses' an ASCII \\b would match the surface or the cue; the doc is
