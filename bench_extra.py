@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tools.capture_plans import BENCH_QUERIES  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 
 
 def main() -> None:

@@ -37,6 +37,18 @@ def tokens_col(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+def _check_temp_cols(docs: DataFrame, *names: str) -> None:
+    """Raise if ``docs`` already has a column named like one of the helper's
+    temporary columns: ``withColumn`` would overwrite it and the final
+    ``drop`` would remove it from the output."""
+    clash = sorted(set(names) & set(docs.columns))
+    if clash:
+        raise ValueError(
+            f"input already has column(s) {clash}, which this helper uses as "
+            "temporary columns; rename them first"
+        )
+
+
 def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds n_tokens, n_distinct_tokens, avg_token_len (rounded, 4dp)."""
     # materialize the token array once (r07): three consumers of an inline
@@ -45,6 +57,7 @@ def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # sum of token lengths == length of the concatenation (r07): one
     # codegen'd array_join+length instead of an interpreted aggregate fold
     sum_len = F.length(F.array_join(toks, "")).cast("long")
+    _check_temp_cols(docs, "_toks")
     return (
         docs.withColumn("_toks", tokens_col(F.col(text_col)))
         .withColumn("n_tokens", F.size(toks))
@@ -83,6 +96,7 @@ def with_repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     tris = F.col("_tris")
+    _check_temp_cols(docs, "_toks", "_tris")
     return (
         docs.withColumn("_toks", tokens_col(F.col(text_col)))
         .withColumn("_tris", tris_expr)
@@ -149,6 +163,7 @@ def with_quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     score4 = (
         (F.col("_x") - F.pmod(F.col("_x"), F.col("_y"))) / F.col("_y")
     ).cast("long")
+    _check_temp_cols(docs, "_toks", "_x", "_y")
     return (
         docs.withColumn("_toks", tokens_col(F.col(text_col)))
         .withColumn("_x", x)
@@ -180,6 +195,7 @@ def with_lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ]
     )
     best = F.col("_best")
+    _check_temp_cols(docs, "_toks", "_best")
     return (
         docs.withColumn(
             "_toks", F.transform(tokens_col(F.col(text_col)), lambda t: F.lower(t))
@@ -212,6 +228,7 @@ def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, c: F.pmod(acc * 131 + c, mod),
     )
+    _check_temp_cols(docs, "_norm")
     return (
         docs.withColumn(
             "_norm", F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
@@ -330,6 +347,7 @@ def with_filter_flags(
     ).cast("int")
     f_dup3 = ((n_tri > 0) & (100 * (n_tri - n_tri_d) > dup3_pct_max * n_tri)).cast("int")
     f_stop = (64 * n_stop < stop_per_64_min * n).cast("int")
+    _check_temp_cols(docs, "_toks", "_tris")
     return (
         docs.withColumn("_toks", tokens_col(F.col(text_col)))
         .withColumn("_tris", tris_expr)

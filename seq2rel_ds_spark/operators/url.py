@@ -90,7 +90,13 @@ def crawl_dedup(
     the map side as the salt).  Row-identical: row_number over
     (ts desc, url desc) = 1 picks exactly the lexicographic max of
     (ts, url), and later struct fields never decide because (url, ts) is
-    the fetch identity."""
+    the fetch identity.
+
+    Every payload column (each column of ``pages`` besides ``ts_col`` and
+    ``url_col``) must be of an orderable type, because the struct ``max``
+    compares whole structs: a map column (or a struct or array holding a
+    map) fails analysis.  Convert such columns first, for example with
+    ``to_json``."""
     cu = with_canonical_url(pages, url_col=url_col)
     payload = [c for c in pages.columns if c not in (ts_col, url_col)]
     s = F.struct(F.col(ts_col), F.col(url_col), *[F.col(c) for c in payload])

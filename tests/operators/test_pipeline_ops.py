@@ -202,6 +202,16 @@ class TestTextStats:
         out = {r["doc_id"]: r["lang_guess"] for r in with_lang_id(df).collect()}
         assert out[0] == "en" and out[1] == "de" and out[2] == "und"
 
+    def test_temp_column_clash_raises(self, spark, docs_df):
+        from seq2rel_ds_spark.operators.textstats import with_quality_score
+
+        clash = docs_df.withColumn("_x", F.lit(1))
+        with pytest.raises(ValueError, match=r"\['_x'\]"):
+            with_quality_score(clash)
+        # other inputs keep their columns and gain only the score
+        out = with_quality_score(docs_df.withColumn("x", F.lit(1)))
+        assert out.columns == docs_df.columns + ["x", "quality_score"]
+
 
 class TestSplit:
     def test_hash_split_deterministic_partition(self, spark):

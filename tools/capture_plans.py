@@ -16,25 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "events_hourly",
-    "events_sessions",
-    "events_funnel",
-    "events_retention",
-    "doc_token_stats",
-    "token_histogram",
-    "exact_dedup",
-    "doc_quality",
-    "doc_redact",
-    "ann_topk",
-    "kg_triples",
-    "kg_two_hop",
-    "kg_pagerank",
-    "tfidf_top_terms",
-]
+from bench import BENCH_QUERIES  # noqa: E402
 
 
 def main() -> None:

@@ -1,7 +1,12 @@
 """Local replica of the driver's correctness gate: run each __spark_entry__
 query on Spark and its oracle on DuckDB at the given scale, compare
 row-count, schema width, and order-insensitive values (columns sorted by
-name, rows sorted)."""
+name, rows sorted).
+
+Each gate's line also carries the number of classes Spark compiled for
+that gate's Spark side (the ``CodegenMetrics`` compile count delta), and
+the last line the total: on a repeated sweep in one session, a gate that
+keeps compiling has generated code that differs from call to call."""
 
 from __future__ import annotations
 
@@ -43,28 +48,33 @@ def main():
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount
+    c_start = compiles()
     failures = 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
         t0 = time.monotonic()
+        c0 = compiles()
         try:
             df = fn(spark, SF_DIR)
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error ({compiles() - c0} compiled): {e}")
             failures += 1
             continue
+        compiled = compiles() - c0
         if name not in oracles:
-            print(f"rows  {name}: {len(spark_rows)} rows (no oracle)")
+            print(f"rows  {name}: {len(spark_rows)} rows (no oracle, {compiled} compiled)")
             continue
         try:
             res = con.execute(oracles[name])
             duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error ({compiled} compiled): {e}")
             failures += 1
             continue
         ok_cols = sorted(spark_cols) == sorted(duck_cols)
@@ -73,12 +83,13 @@ def main():
         if ok_cols and ok_vals:
             # spark-side wall seconds beside each row count: a gate that
             # creeps toward the driver harness's time budget shows up here
-            print(f"OK    {name}: {len(spark_rows)} rows ({time.monotonic() - t0:.1f}s)")
+            wall = time.monotonic() - t0
+            print(f"OK    {name}: {len(spark_rows)} rows ({wall:.1f}s, {compiled} compiled)")
         else:
             failures += 1
             print(
                 f"FAIL  {name}: cols {sorted(spark_cols)} vs {sorted(duck_cols)}; "
-                f"rows {len(a)} vs {len(b)}"
+                f"rows {len(a)} vs {len(b)} ({compiled} compiled)"
             )
             for x, y in list(zip(a, b))[:3]:
                 if x != y:
@@ -89,7 +100,7 @@ def main():
                 print(f"      only-spark: {extra_s}")
             if extra_d:
                 print(f"      only-duck:  {extra_d}")
-    print(f"\n{failures} failures")
+    print(f"\n{failures} failures, {compiles() - c_start} classes compiled")
     sys.exit(1 if failures else 0)
 
 
