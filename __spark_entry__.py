@@ -16,10 +16,13 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -29,8 +32,58 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 KG_TERMS = ["spark", "table", "join", "filter", "window", "stream", "hash", "merge"]
 
 
+# Parquet schemas of the tables _t has read: (JVM session UUID, absolute
+# path) -> (file identity, schema).
+#
+# Spark infers a Parquet table's schema on every read, and the inference
+# (ParquetUtils.inferSchema -> mergeSchemasInParallel) runs a Spark job even
+# for one file with mergeSchema off; a read given the schema runs none. One
+# sweep over the registry re-read unchanged footers this way ~30 times, at
+# 65-80 ms each. So the first read of a table infers as Spark always does,
+# and later reads pass that schema back. Each call still builds a fresh
+# relation (new attribute ids, fresh file listing): plans and results do not
+# change, only the inference job goes away.
+#
+# The key holds the session because inference follows its Parquet confs.
+# The file identity holds ctime because shutil.copy2 gives a copy its
+# source's mtime, so a table copied over another can keep an old mtime; the
+# kernel sets ctime on every change. It covers every file under a directory
+# table: a part file rewritten in place would otherwise keep the old schema,
+# and Spark reads the columns that schema lacks as null, without an error.
+# A rewritten table replaces its entry, so the memo holds one schema per
+# table path read in a session. Threads racing on one table at worst infer
+# it twice: an entry is used only while its file identity still matches.
+#
+# Rejected: memoizing the DataFrame, which would make two branches of one
+# query share attribute ids (ambiguous self-joins) to save the ~13 ms a
+# schema-given read still costs; and reading the footer with pyarrow, which
+# would re-implement Spark's Parquet -> Catalyst type mapping (INT96,
+# decimals, timestamp_ntz, nested types).
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    st = os.stat(path)
+    ident = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    if not stat.S_ISDIR(st.st_mode):
+        return ident
+    with os.scandir(path) as entries:
+        return ident, tuple(sorted((e.name, _file_identity(e.path)) for e in entries))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        ident = _file_identity(path)
+    except OSError:  # not a local path: no memo
+        return spark.read.parquet(path)
+    key = (spark._jsparkSession.sessionUUID(), os.path.abspath(path))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (ident, df.schema)
+    return df
 
 
 # ---------------------------------------------------------------------------

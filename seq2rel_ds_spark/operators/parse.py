@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from seq2rel_ds_spark.functions.exprs import is_int_col, normalize_ws_col
+from seq2rel_ds_spark.operators.textstats import _check_temp_cols
 
 MEMBER_SCHEMA = ArrayType(
     StructType(
@@ -100,6 +101,7 @@ def parse_documents(
 ) -> DataFrame:
     """Normalize (doc_id, title, abstract, ann_lines) into clusters+relations."""
     assert text_segment in ("title", "abstract", "both")
+    _check_temp_cols(docs, "_cols", "_mcols", "_rcols")
 
     is_mention = lambda c: is_int_col(F.get(c, 1)) & is_int_col(F.get(c, 2))  # noqa: E731
 

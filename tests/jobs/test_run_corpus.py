@@ -11,7 +11,7 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, str(Path(__file__).resolve().parents[2] / "jobs"))
 
 from tests.fixtures import synth  # noqa: E402
 

@@ -75,6 +75,17 @@ class TestSparkParseLinearize:
         with pytest.raises(ValueError):
             raise_on_malformed(parsed)
 
+    def test_temp_column_clash_raises(self, spark):
+        from pyspark.sql import functions as F
+
+        docs = docs_from_strings(spark, synth.CDR_CORPUS)
+        for name in ("_cols", "_mcols", "_rcols"):
+            with pytest.raises(ValueError, match=rf"\['{name}'\]"):
+                parse_documents(docs.withColumn(name, F.lit(1)))
+        # other extra columns are not checked, and the output schema is fixed
+        out = parse_documents(docs.withColumn("cols", F.lit(1)))
+        assert out.columns == parse_documents(docs).columns
+
     def test_normalized_views(self, spark):
         docs = docs_from_strings(spark, synth.CDR_CORPUS)
         parsed = parse_documents(docs)

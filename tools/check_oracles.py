@@ -4,17 +4,26 @@ row-count, schema width, and order-insensitive values (columns sorted by
 name, rows sorted).
 
 Each gate's line also carries the number of classes Spark compiled for
-that gate's Spark side (the ``CodegenMetrics`` compile count delta), and
-the last line the total: on a repeated sweep in one session, a gate that
-keeps compiling has generated code that differs from call to call."""
+that gate's Spark side (the ``CodegenMetrics`` compile count delta) and the
+number of Spark jobs it launched, and the last line the totals: on a
+repeated sweep in one session, a gate that keeps compiling has generated
+code that differs from call to call.
+
+Jobs are counted from the scheduler's job id counter, not with a job group:
+a streaming gate's micro-batches run their jobs in the stream's own group.
+
+Run it from the root of the checkout to gate: this script imports the
+engine from the checkout it sits in, and Spark's Python workers import it
+from the working directory."""
 
 from __future__ import annotations
 
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 
@@ -50,31 +59,34 @@ def main():
     oracles = entry_mod.oracle_sql()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = codegen.METRIC_COMPILATION_TIME().getCount
-    c_start = compiles()
+    # next job id: jobs launched by any thread, stream micro-batches included
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    c_start, j_start = compiles(), next_job()
     failures = 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
         t0 = time.monotonic()
-        c0 = compiles()
+        c0, j0 = compiles(), next_job()
         try:
             df = fn(spark, SF_DIR)
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
         except Exception as e:
-            print(f"FAIL  {name}: spark error ({compiles() - c0} compiled): {e}")
+            cost = f"{compiles() - c0} compiled, {next_job() - j0} jobs"
+            print(f"FAIL  {name}: spark error ({cost}): {e}")
             failures += 1
             continue
-        compiled = compiles() - c0
+        cost = f"{compiles() - c0} compiled, {next_job() - j0} jobs"
         if name not in oracles:
-            print(f"rows  {name}: {len(spark_rows)} rows (no oracle, {compiled} compiled)")
+            print(f"rows  {name}: {len(spark_rows)} rows (no oracle, {cost})")
             continue
         try:
             res = con.execute(oracles[name])
             duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error ({compiled} compiled): {e}")
+            print(f"FAIL  {name}: duckdb error ({cost}): {e}")
             failures += 1
             continue
         ok_cols = sorted(spark_cols) == sorted(duck_cols)
@@ -84,12 +96,12 @@ def main():
             # spark-side wall seconds beside each row count: a gate that
             # creeps toward the driver harness's time budget shows up here
             wall = time.monotonic() - t0
-            print(f"OK    {name}: {len(spark_rows)} rows ({wall:.1f}s, {compiled} compiled)")
+            print(f"OK    {name}: {len(spark_rows)} rows ({wall:.1f}s, {cost})")
         else:
             failures += 1
             print(
                 f"FAIL  {name}: cols {sorted(spark_cols)} vs {sorted(duck_cols)}; "
-                f"rows {len(a)} vs {len(b)} ({compiled} compiled)"
+                f"rows {len(a)} vs {len(b)} ({cost})"
             )
             for x, y in list(zip(a, b))[:3]:
                 if x != y:
@@ -100,7 +112,10 @@ def main():
                 print(f"      only-spark: {extra_s}")
             if extra_d:
                 print(f"      only-duck:  {extra_d}")
-    print(f"\n{failures} failures, {compiles() - c_start} classes compiled")
+    print(
+        f"\n{failures} failures, {compiles() - c_start} classes compiled, "
+        f"{next_job() - j_start} jobs"
+    )
     sys.exit(1 if failures else 0)
 
 
