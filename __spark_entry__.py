@@ -2105,8 +2105,10 @@ def q_triples_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     any replay-dedup or merge bug inflates/loses counts and breaks the hash.
 
     The relation derivation is Catalyst (term co-occurrence per doc) so the
-    oracle can restate it; the fused page scan that production streams use
-    is parity- and gate-audited separately (``relation_scan`` override).
+    oracle can restate it, counted per triple into the (subj_uid, pred,
+    obj_uid, cnt) partials the stream merges; the fused page scan that
+    production streams use is parity- and gate-audited separately
+    (``partial_scan`` override).
     Stream artifacts live in a session-lifetime temp dir (the returned
     DataFrame lazily reads them; cleaning here would break collection)."""
     import tempfile
@@ -2156,8 +2158,10 @@ def q_triples_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         q = start_triples_stream(
-            stream, [], {}, inc, ck, salt_buckets=4, available_now=True,
-            relation_scan=lambda df: df,
+            stream, [], {}, inc, ck, available_now=True,
+            partial_scan=lambda df: df.groupBy("subj_uid", "pred", "obj_uid").agg(
+                F.count("*").alias("cnt")
+            ),
         )
         _drain_and_stop(q)
     incdf = spark.read.parquet(inc)

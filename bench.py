@@ -164,74 +164,45 @@ def ann_recall(spark, sf_dir: str) -> dict:
 
 def run_kg_fused(spark, pages, partitions: int, pages_path: str = None) -> tuple:
     """Fused flagship pipeline over a pages DataFrame (typically a parquet
-    scan, as in production); returns (n_triples, seconds).
+    scan, as in production); returns ((n_triples, n_instances), seconds).
 
     All doc-local semantics (extract, sentence scan, dictionary+coherence
     linking, per-cue subject/object selection) run in ONE Arrow pass — no
     text or mention row ever crosses a shuffle.  The only shuffle is the
     canonical triple merge, over skinny pre-aggregated rows.
 
-    Default path (round 4): Arrow-native source + fused map-side combine
+    With a ``pages_path``: Arrow-native source + fused map-side combine
     (``fused_triple_partials_arrow`` + ``canonicalize_from_partials``) —
     python workers read their (file, row_group) splits directly with pyarrow
     and emit per-task (subj, pred, obj, cnt) PARTIALS, so neither the html
     bytes nor the ~17 relation instances/doc ever cross the Arrow IPC
     boundary; the JVM only schedules tasks and merges
-    O(distinct-triples x tasks) rows.  Both the scan source and the combine
-    are parity-pinned row-identical to the modular Catalyst path
+    O(distinct-triples x tasks) rows.  Without one, the same kernel runs
+    over the JVM scan of ``pages`` (``fused_triple_partials``).  Both are
+    parity-pinned to the modular Catalyst path
     (tests/operators/test_fused_scan.py).
-
-    ``SPARK_GRAFT_SOURCE`` selects alternatives for A/B evidence:
-      * ``jvm``          — JVM parquet scan, instance rows, salted two-phase
-                           aggregate (the round-3 recorded default; measured
-                           JVM-scan scaling 0.44 in isolation — BENCH.md)
-      * ``arrow``        — Arrow-native scan, instance rows, salted aggregate
-      * ``jvm_combine``  — JVM scan + fused map-side combine
-      * anything else    — the default above
     """
+    from pyspark.sql import functions as F
+
     from seq2rel_ds_spark.operators.mention import (
-        fused_relation_scan,
-        fused_relation_scan_arrow,
         fused_triple_partials,
         fused_triple_partials_arrow,
     )
-    from seq2rel_ds_spark.operators.triples import (
-        canonicalize_from_partials,
-        canonicalize_triples,
-    )
+    from seq2rel_ds_spark.operators.triples import canonicalize_from_partials
     from seq2rel_ds_spark.sources import pages as pages_src
 
     dictionary = pages_src.dictionary_df(spark)
     dict_rows = [
         (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in dictionary.collect()
     ]
-    source = os.environ.get("SPARK_GRAFT_SOURCE", "arrow_combine")
-    if source in ("arrow", "arrow_combine") and not pages_path:
-        source = "jvm_combine" if source == "arrow_combine" else "jvm"
     t0 = time.time()
-    if source == "arrow":
-        relations = fused_relation_scan_arrow(
-            spark, pages_path, dict_rows, pages_src.PREDICATES
-        )
-        triples = canonicalize_triples(relations, salt_buckets=64)
-    elif source == "jvm":
-        relations = fused_relation_scan(pages, dict_rows, pages_src.PREDICATES)
-        triples = canonicalize_triples(relations, salt_buckets=64)
-    elif source == "jvm_combine":
-        partials = fused_triple_partials(pages, dict_rows, pages_src.PREDICATES)
-        triples = canonicalize_from_partials(partials)
-    else:  # arrow_combine — the default
+    if pages_path:
         partials = fused_triple_partials_arrow(
             spark, pages_path, dict_rows, pages_src.PREDICATES
         )
-        triples = canonicalize_from_partials(partials)
-    from pyspark.sql import functions as F
-
-    if os.environ.get("SPARK_GRAFT_KG_SCAN_ONLY"):
-        # experiment knob: isolate the scan stage from the canonical
-        # aggregation (not used for recorded numbers)
-        n = (relations if source in ("arrow", "jvm") else partials).count()
-        return (0, n), time.time() - t0
+    else:
+        partials = fused_triple_partials(pages, dict_rows, pages_src.PREDICATES)
+    triples = canonicalize_from_partials(partials)
     row = triples.agg(
         F.count("*").alias("n_triples"), F.sum("n_support").alias("n_instances")
     ).first()

@@ -12,8 +12,8 @@ Build the py-files archive with:
 
 The job runs either the checkpointed staged pipeline (resumable, lineage —
 the production shape) or the fused single-pass plan (--fused, the bench
-shape), writes the canonical triple table through the catalog, and prints a
-one-line JSON summary.
+shape: per-task triple partials, then one merge), writes the canonical
+triple table through the catalog, and prints a one-line JSON summary.
 """
 
 from __future__ import annotations
@@ -44,8 +44,8 @@ def main() -> None:
 
     t0 = time.time()
     if args.fused:
-        from seq2rel_ds_spark.operators.mention import fused_relation_scan
-        from seq2rel_ds_spark.operators.triples import canonicalize_triples
+        from seq2rel_ds_spark.operators.mention import fused_triple_partials
+        from seq2rel_ds_spark.operators.triples import canonicalize_from_partials
         from seq2rel_ds_spark.sources.pages import PREDICATES, dictionary_df
 
         d = dictionary_df(spark)
@@ -53,9 +53,8 @@ def main() -> None:
             (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
         ]
         pages = synthesize_pages(spark, args.n_docs, partitions=args.partitions)
-        triples = canonicalize_triples(
-            fused_relation_scan(pages, dict_rows, PREDICATES),
-            salt_buckets=64,
+        triples = canonicalize_from_partials(
+            fused_triple_partials(pages, dict_rows, PREDICATES),
             output_partitions=args.partitions,
         )
     else:

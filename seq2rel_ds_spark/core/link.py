@@ -1,9 +1,10 @@
 """Doc-local entity linking + sentence relation selection (pure Python).
 
 These are the per-document semantics used inside the fused Arrow scan pass
-(operators/mention.py:fused_relation_scan).  Kept Spark-free so they are
-unit-testable and provably identical to the Catalyst operators
-(operators/mention.py:link_mentions, operators/triples.py:extract_relations)
+(operators/mention.py:_make_doc_relations, behind fused_triple_partials).
+Kept Spark-free so they are unit-testable and provably identical to the
+Catalyst operators (operators/mention.py:link_mentions,
+operators/triples.py:extract_relations)
 — the DataFrame variants remain the right choice when the dictionary is too
 large to ship in task closures or when linking needs cross-document signals.
 

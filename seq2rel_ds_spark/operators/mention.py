@@ -13,12 +13,14 @@ only small typed rows flow on.
 Offsets are document-level character spans (sentence start + in-sentence
 match span) so downstream ordering matches the parse path's semantics.
 
-The fused flagship kernel (``make_triple_partial_processor`` /
-``make_relation_processor``) chooses its word-boundary mode per document:
-an ASCII text is scanned with ``re.ASCII`` patterns and a ``str.find`` cue
-loop, any other text with the Unicode patterns.  On ASCII text ``\\b``
-matches the same positions in both modes, so the output is that of the
-Unicode scan on every input.
+The fused flagship kernel (``make_triple_partial_processor``, behind
+``fused_triple_partials`` and ``fused_triple_partials_arrow``) runs extract,
+scan, link and relation selection per page and emits only per-task
+(subj_uid, pred, obj_uid, cnt) partials.  It chooses its word-boundary mode
+per document: an ASCII text is scanned with ``re.ASCII`` patterns and a
+``str.find`` cue loop, any other text with the Unicode patterns.  On ASCII
+text ``\\b`` matches the same positions in both modes, so the output is
+that of the Unicode scan on every input.
 """
 
 from __future__ import annotations
@@ -282,63 +284,8 @@ def scan_sentences(
     return texts.select("url", text_col).mapInPandas(scan, schema=SCAN_SCHEMA)
 
 
-def scan_pages(
-    pages: DataFrame,
-    surfaces: List[str],
-    predicates: Optional[Dict[str, str]] = None,
-) -> DataFrame:
-    """Fused extract+scan: html bytes -> scan rows in ONE Arrow pass.
-
-    Halves JVM<->Python IPC vs chaining extract_stage and scan_sentences
-    (the full text never crosses the Arrow boundary twice) — the right
-    shape when the text itself isn't a required output.
-    """
-    from seq2rel_ds_spark.operators.extract import extract_text_from_html
-
-    bc = pages.sparkSession.sparkContext.broadcast(
-        (list(surfaces), dict(predicates or {}))
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pattern_surfaces, preds = bc.value
-        pat = _compile_dictionary(pattern_surfaces)
-        cue_pat = _compile_cue_pattern(preds) if preds else None
-        for pdf in batches:
-            out = {
-                k: []
-                for k in ("url", "sent_idx", "sent_start", "start", "end", "kind", "token")
-            }
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text_from_html(bytes(html))
-                mentions, cues = _scan_doc(text, pat, cue_pat)
-                for si, ss, s, e, tok in mentions:
-                    out["url"].append(url)
-                    out["sent_idx"].append(si)
-                    out["sent_start"].append(ss)
-                    out["start"].append(s)
-                    out["end"].append(e)
-                    out["kind"].append("mention")
-                    out["token"].append(tok)
-                for si, ss, s, e, w in cues:
-                    out["url"].append(url)
-                    out["sent_idx"].append(si)
-                    out["sent_start"].append(ss)
-                    out["start"].append(s)
-                    out["end"].append(e)
-                    out["kind"].append("cue")
-                    out["token"].append(preds[w])
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "html").mapInPandas(scan, schema=SCAN_SCHEMA)
-
-
-RELATION_SCAN_SCHEMA = (
-    "url string, sent_idx int, subj_uid string, pred string, obj_uid string"
-)
-
-
 def _make_doc_relations(dict_rows: List[tuple], predicates: Dict[str, str]):
-    """Per-document body of both fused processors: extracted text ->
+    """Per-document body of the fused kernel: extracted text ->
     [(sent_idx, subj_uid, pred, obj_uid)], one per cue that has a subject
     and an object in its sentence, in cue order — equal to
     ``select_relations(link_doc_mentions(mentions), cues)`` over the
@@ -431,37 +378,16 @@ def _make_doc_relations(dict_rows: List[tuple], predicates: Dict[str, str]):
     return relations
 
 
-def make_relation_processor(dict_rows: List[tuple], predicates: Dict[str, str]):
-    """Per-batch relation-scan body shared by BOTH scan paths (JVM parquet ->
-    mapInPandas, and the Arrow-native pyarrow source): pandas frame of
-    (url, html) -> iterator of relation frames.  Compiled state (dictionary,
-    patterns) is built once per call — callers construct the processor once
-    per task/partition, not per batch."""
-    from seq2rel_ds_spark.operators.extract import extract_text_from_html
-
-    relations = _make_doc_relations(dict_rows, predicates)
-
-    def process(pdf: pd.DataFrame):
-        out = {k: [] for k in ("url", "sent_idx", "subj_uid", "pred", "obj_uid")}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            for sent_idx, subj, pred, obj in relations(extract_text_from_html(bytes(html))):
-                out["url"].append(url)
-                out["sent_idx"].append(sent_idx)
-                out["subj_uid"].append(subj)
-                out["pred"].append(pred)
-                out["obj_uid"].append(obj)
-        yield pd.DataFrame(out)
-
-    return process
-
-
 TRIPLE_PARTIAL_SCHEMA = "subj_uid string, pred string, obj_uid string, cnt long"
 
 
 def make_triple_partial_processor(dict_rows: List[tuple], predicates: Dict[str, str]):
-    """Like ``make_relation_processor`` but with MAP-SIDE COMBINE fused into
-    the scan task: each batch emits per-(subj, pred, obj) partial COUNTS
-    instead of one row per relation instance.
+    """Per-batch body of both fused scans (JVM parquet -> mapInPandas, and
+    the Arrow-native pyarrow source): pandas frame of html -> one frame of
+    per-(subj, pred, obj) partial COUNTS, with the MAP-SIDE COMBINE fused
+    into the scan task, so no row per relation instance is ever emitted.
+    Compiled state (dictionary, patterns) is built once per call; callers
+    build the processor once per task, not per batch.
 
     Why this is the 100 TB shape: the doc-local scan produces ~17 relation
     instances per page but only ever |distinct triples seen by the task|
@@ -470,8 +396,9 @@ def make_triple_partial_processor(dict_rows: List[tuple], predicates: Dict[str, 
     O(distinct-per-task), not O(instances) — the same bound the salted
     two-phase aggregate provides, obtained one stage earlier.  Canonical ids
     and the global merge stay in Catalyst (``canonicalize_from_partials``).
-    Parity with the instance-row path is pinned by
-    tests/operators/test_fused_scan.py (identical triples AND n_support).
+    Parity with the modular Catalyst operators through the salted
+    ``canonicalize_triples`` is pinned by tests/operators/test_fused_scan.py
+    (identical triples AND n_support).
 
     Counts accumulate in place, with no per-instance rows or intermediate
     frame.  Counter.update over a generator was tried for the count loop
@@ -540,7 +467,10 @@ def fused_triple_partials_arrow(
 
     bc = spark.sparkContext.broadcast((list(dictionary_rows), dict(predicates)))
 
-    state: dict = {}  # one compiled processor per worker process
+    # cloudpickle ships this dict inside the task closure, so every task
+    # unpickles an empty one: it holds one compiled processor per task
+    # (built on the task's first batch), not per worker process
+    state: dict = {}
 
     def process(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         if "proc" not in state:
@@ -553,70 +483,6 @@ def fused_triple_partials_arrow(
         process,
         schema=TRIPLE_PARTIAL_SCHEMA,
         columns=["html"],  # url never reaches the combine — prune at the reader
-        batch_size=batch_size,
-    )
-
-
-def fused_relation_scan(
-    pages: DataFrame,
-    dictionary_rows: List[tuple],
-    predicates: Dict[str, str],
-) -> DataFrame:
-    """The whole doc-local half of the KG pipeline in ONE Arrow pass:
-    html -> text -> sentence scan -> dictionary+coherence linking ->
-    per-cue subject/object selection -> relation rows.
-
-    Nothing here needs cross-document state, so no byte of text or mention
-    ever crosses a shuffle; the only shuffle left in the flagship plan is
-    the salted canonical aggregation downstream.  Semantics are the pure
-    functions in core.link — identical to the modular Catalyst operators,
-    pinned by tests.
-
-    ``dictionary_rows``: (surface, uid, label, is_canonical) tuples —
-    shipped via ``SparkContext.broadcast`` (once per executor; the task
-    closure carries only the broadcast handle).
-    """
-    bc = pages.sparkSession.sparkContext.broadcast(
-        (list(dictionary_rows), dict(predicates))
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        process = make_relation_processor(*bc.value)
-        for pdf in batches:
-            yield from process(pdf)
-
-    return pages.select("url", "html").mapInPandas(scan, schema=RELATION_SCAN_SCHEMA)
-
-
-def fused_relation_scan_arrow(
-    spark,
-    pages_path: str,
-    dictionary_rows: List[tuple],
-    predicates: Dict[str, str],
-    batch_size: int = 20000,
-) -> DataFrame:
-    """The flagship scan over the Arrow-native parquet source: Python
-    workers read their (file, row_group) splits directly with pyarrow —
-    one decode, no JVM->Python IPC for the html bytes.  Identical output to
-    ``fused_relation_scan`` over the same files (parity-tested); see
-    sources/arrow_pages.py for when this path wins and what it gives up."""
-    from seq2rel_ds_spark.sources.arrow_pages import scan_parquet_python
-
-    bc = spark.sparkContext.broadcast((list(dictionary_rows), dict(predicates)))
-
-    state: dict = {}  # one compiled processor per worker process
-
-    def process(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        if "proc" not in state:
-            state["proc"] = make_relation_processor(*bc.value)
-        yield from state["proc"](pdf)
-
-    return scan_parquet_python(
-        spark,
-        pages_path,
-        process,
-        schema=RELATION_SCAN_SCHEMA,
-        columns=["url", "html"],
         batch_size=batch_size,
     )
 

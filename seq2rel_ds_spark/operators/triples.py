@@ -6,8 +6,12 @@ Stages (north_star wording in parentheses):
     the reference's gold relation lines).  Pure Catalyst: a broadcast
     predicate dictionary, window functions for nearest-mention selection.
   * ``canonicalize_triples`` — deterministic entity-ID assignment
-    (md5 of the cluster's canonical key), salted two-phase dedup to control
-    hub-entity skew, explicit repartition after the dedup stage.
+    (md5 of the canonical key), salted two-phase dedup to control
+    hub-entity skew, explicit repartition after the dedup stage.  The
+    staged pipeline's merge over relation rows.
+  * ``canonicalize_from_partials`` — the same output from the fused
+    kernel's per-task (subj_uid, pred, obj_uid, cnt) partials, whose
+    map-side combine replaces the salting.
 """
 
 from __future__ import annotations
@@ -68,8 +72,8 @@ def canonicalize_from_partials(
     aggregate enforces, achieved one stage earlier: a hub entity arrives as
     at most one partial row per task, never as a hot groupBy key.  The md5
     entity-id assignment runs on the merged (small) aggregate only.
-    Parity with ``canonicalize_triples`` over the instance-row path is pinned
-    by tests/operators/test_fused_scan.py.
+    Parity with ``canonicalize_triples`` over the modular relation rows is
+    pinned by tests/operators/test_fused_scan.py.
     """
     final = (
         partials.groupBy("subj_uid", "pred", "obj_uid")
@@ -90,14 +94,11 @@ def canonicalize_from_partials(
 
 def canonicalize_triples(
     relations: DataFrame,
-    entity_components: DataFrame = None,
     salt_buckets: int = 64,
     output_partitions: int = None,
 ) -> DataFrame:
     """(subj, pred, obj, n_support) canonical triple table.
 
-    * optional component mapping folds coreferent uids into one canonical id
-      (join with the connected-components output; uid -> component)
     * deterministic entity ids: md5 of the canonical key (stable across
       runs, partitionings and cluster sizes)
     * salted two-phase dedup/aggregation: hub entities (a subj appearing in
@@ -105,22 +106,7 @@ def canonicalize_triples(
       before the final merge — the mandated groupBy-skew control
     * explicit repartition after dedup (north_star) sized by the caller
     """
-    t = relations
-    if entity_components is not None:
-        comp = entity_components.select(
-            F.col("node").alias("subj_uid"), F.col("component").alias("subj_c")
-        )
-        t = t.join(F.broadcast(comp), "subj_uid", "left").withColumn(
-            "subj_uid", F.coalesce("subj_c", "subj_uid")
-        )
-        comp_o = entity_components.select(
-            F.col("node").alias("obj_uid"), F.col("component").alias("obj_c")
-        )
-        t = t.join(F.broadcast(comp_o), "obj_uid", "left").withColumn(
-            "obj_uid", F.coalesce("obj_c", "obj_uid")
-        )
-
-    keyed = t.select(
+    keyed = relations.select(
         F.md5(F.col("subj_uid")).alias("subj"),
         F.col("pred"),
         F.md5(F.col("obj_uid")).alias("obj"),

@@ -4,17 +4,19 @@ The standard path (``spark.read.parquet`` -> ``mapInPandas``) decodes
 parquet in the JVM, re-serializes every row through the Arrow IPC socket,
 and materializes it again in the Python worker — three passes over the
 bytes before the first line of user Python runs.  When the *consumer* of
-the scan is itself a Python stage (the fused relation scan, multimodal
-decode), that JVM round trip buys nothing: this source instead distributes
-``(file, row_group)`` splits as plain rows and lets each Python worker read
-its split directly with ``pyarrow.parquet`` — one decode, zero inbound IPC.
-The same pattern Petastorm / Ray Data / DL data loaders use.
+the scan is itself a Python stage (the fused triple-partial scan,
+``fused_triple_partials_arrow``), that JVM round trip buys nothing: this
+source instead distributes ``(file, row_group)`` splits as plain rows and
+lets each Python worker read its split directly with ``pyarrow.parquet`` —
+one decode, zero inbound IPC.  The same pattern Petastorm / Ray Data / DL
+data loaders use.  It is the flagship's default scan whenever the pages
+are a parquet path (bench.py, perfbench); a DataFrame input takes the JVM
+scan (``fused_triple_partials``).
 
-Trade-offs (why this is NOT the default scan):
+Trade-offs:
   * Catalyst sees only the split table — no automatic predicate pushdown or
     column pruning into the scan; callers pass ``columns=`` (projection
-    pushdown) and may pass ``filters=`` (pyarrow row-group predicate)
-    explicitly.
+    pushdown) explicitly.
   * No schema evolution / partition discovery beyond what the listing does.
   * Only worth it when the next stage is Python anyway; for relational
     consumers the JVM scan with full Catalyst integration wins.
@@ -72,7 +74,6 @@ def scan_parquet_python(
     schema: str,
     columns: Optional[List[str]] = None,
     batch_size: int = 20000,
-    partitions: Optional[int] = None,
 ) -> DataFrame:
     """Run ``process`` (a pandas-batch generator function) directly over the
     parquet data, reading each (file, row_group) split with pyarrow inside
@@ -87,7 +88,7 @@ def scan_parquet_python(
     if not splits:
         return spark.createDataFrame([], schema)
     sdf = spark.createDataFrame(splits, "file string, row_group int")
-    sdf = sdf.repartition(partitions or len(splits))
+    sdf = sdf.repartition(len(splits))
 
     def read_and_process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq

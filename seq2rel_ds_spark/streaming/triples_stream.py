@@ -2,11 +2,11 @@
 canonical triple counts.
 
 Scale shape (the LSM/delta pattern, NOT read-modify-write):
-  * each micro-batch runs the same fused doc-local scan as the batch
-    pipeline and APPENDS its batch-local canonical partial aggregates to an
-    increments table, stamped with the epoch id — appending partials is
-    O(batch), while merging into a 100 TB base table per batch would
-    rewrite the world
+  * each micro-batch runs the fused doc-local scan with its map-side
+    combine (``fused_triple_partials``), merges the per-task partials into
+    batch-local canonical counts and APPENDS them to an increments table,
+    stamped with the epoch id — appending partials is O(batch), while
+    merging into a 100 TB base table per batch would rewrite the world
   * reads merge lazily: dedupe replayed epochs (a restarted
     ``foreachBatch`` may re-run an epoch; its rows are bit-identical, so
     (epoch_id, subj, pred, obj) dedup restores exactly-once), then sum
@@ -15,7 +15,9 @@ Scale shape (the LSM/delta pattern, NOT read-modify-write):
     compacted base (one aggregation job), bounding read amplification
 
 The batch operators run unchanged inside ``foreachBatch`` — doc-local
-stages are narrow and the canonical aggregation is batch-scoped.
+stages are narrow and the canonical aggregation is batch-scoped.  Each
+epoch's pages arrive as a DataFrame, not a path, so the epoch takes the
+JVM-scan partials rather than the Arrow-native source.
 """
 
 from __future__ import annotations
@@ -34,31 +36,30 @@ def start_triples_stream(
     predicates: Dict[str, str],
     increments_path: str,
     checkpoint_path: str,
-    salt_buckets: int = 16,
     available_now: bool = True,
-    relation_scan=None,
+    partial_scan=None,
 ):
     """Start the incremental maintenance query; returns the StreamingQuery.
 
     ``available_now=True`` drains everything currently in the source and
     stops (the batch-catchup trigger); pass False for a continuous run.
 
-    ``relation_scan`` (batch DataFrame -> relation rows) overrides the
-    default fused page scan — the epoch-append / replay-dedup / merge
-    machinery is scan-agnostic, and the override lets the correctness gate
-    drive it with a SQL-replicable derivation (the fused scan itself is
-    parity- and gate-audited separately).
+    ``partial_scan`` (batch DataFrame -> (subj_uid, pred, obj_uid, cnt)
+    partials) overrides the default fused page scan — the epoch-append /
+    replay-dedup / merge machinery is scan-agnostic, and the override lets
+    the correctness gate drive it with a SQL-replicable derivation (the
+    fused scan itself is parity- and gate-audited separately).
     """
-    from seq2rel_ds_spark.operators.mention import fused_relation_scan
-    from seq2rel_ds_spark.operators.triples import canonicalize_triples
+    from seq2rel_ds_spark.operators.mention import fused_triple_partials
+    from seq2rel_ds_spark.operators.triples import canonicalize_from_partials
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        rel = (
-            relation_scan(batch_df)
-            if relation_scan is not None
-            else fused_relation_scan(batch_df, dictionary_rows, predicates)
+        partials = (
+            partial_scan(batch_df)
+            if partial_scan is not None
+            else fused_triple_partials(batch_df, dictionary_rows, predicates)
         )
-        inc = canonicalize_triples(rel, salt_buckets=salt_buckets)
+        inc = canonicalize_from_partials(partials)
         (
             inc.withColumn("epoch_id", F.lit(int(epoch_id)))
             .write.mode("append")

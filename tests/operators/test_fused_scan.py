@@ -1,78 +1,72 @@
-"""Fused doc-local scan (extract+scan+link+relations in one Arrow pass) must
-be row-identical to the modular Catalyst operators."""
+"""The fused kernel (extract+scan+link+relations+map-side combine in one
+Arrow pass) must equal the modular Catalyst operators: row-identical
+relations per document, and identical canonical triples over both partial
+scan sources."""
+
+from types import SimpleNamespace
+
+import pytest
+
+
+@pytest.fixture(scope="module")
+def kg(spark, tmp_path_factory):
+    """Pages written to parquet and the modular relation rows over them
+    (extract_stage -> scan_sentences -> link_mentions -> extract_relations),
+    collected once for every test here."""
+    from seq2rel_ds_spark.operators.extract import extract_stage
+    from seq2rel_ds_spark.operators.mention import (
+        cue_rows,
+        link_mentions,
+        mention_rows,
+        scan_sentences,
+    )
+    from seq2rel_ds_spark.operators.triples import extract_relations
+    from seq2rel_ds_spark.sources import pages as pages_src
+
+    path = str(tmp_path_factory.mktemp("fused") / "pages")
+    pages_src.synthesize_pages(spark, 150, partitions=3).write.parquet(path)
+    d = pages_src.dictionary_df(spark)
+    dict_rows = [
+        (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
+    ]
+    scans = scan_sentences(
+        extract_stage(spark.read.parquet(path)),
+        [r[0] for r in dict_rows],
+        pages_src.PREDICATES,
+    ).cache()
+    relations = extract_relations(link_mentions(mention_rows(scans), d), cue_rows(scans))
+    rows = [tuple(r) for r in relations.collect()]
+    schema = relations.schema
+    scans.unpersist()
+    return SimpleNamespace(
+        path=path, dict_rows=dict_rows, preds=pages_src.PREDICATES, rows=rows, schema=schema
+    )
 
 
 class TestFusedRelationScan:
-    def test_equals_modular_path(self, spark):
+    def test_equals_modular_path(self, kg):
+        """The kernel's per-document relations, keyed by url, equal the
+        modular relation rows."""
+        import pyarrow.parquet as pq
+
+        from seq2rel_ds_spark.operators.extract import extract_text_from_html
+        from seq2rel_ds_spark.operators.mention import _make_doc_relations
+
+        relations = _make_doc_relations(kg.dict_rows, kg.preds)
+        pages = pq.read_table(kg.path, columns=["url", "html"]).to_pylist()
+        fused = sorted(
+            (p["url"], *rel)
+            for p in pages
+            for rel in relations(extract_text_from_html(p["html"]))
+        )
+        assert fused == sorted(kg.rows) and len(fused) > 0
+
+    def test_fused_combine_partials_equal_instance_path(self, spark, kg):
+        """The flagship path (map-side partial triple counts in the Python
+        task, final merge in Catalyst) must produce the identical canonical
+        triple table — keys AND n_support — as the modular relation rows
+        through the salted two-phase aggregate, on BOTH scan sources."""
         from seq2rel_ds_spark.operators.mention import (
-            cue_rows,
-            fused_relation_scan,
-            link_mentions,
-            mention_rows,
-            scan_pages,
-        )
-        from seq2rel_ds_spark.operators.triples import extract_relations
-        from seq2rel_ds_spark.sources import pages as pages_src
-
-        pages = pages_src.synthesize_pages(spark, 120, partitions=4).cache()
-        d = pages_src.dictionary_df(spark)
-        dict_rows = [
-            (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
-        ]
-        fused = {
-            tuple(r)
-            for r in fused_relation_scan(pages, dict_rows, pages_src.PREDICATES).collect()
-        }
-        scans = scan_pages(
-            pages, [r[0] for r in dict_rows], pages_src.PREDICATES
-        ).cache()
-        modular = {
-            tuple(r)
-            for r in extract_relations(
-                link_mentions(mention_rows(scans), d), cue_rows(scans)
-            ).collect()
-        }
-        assert fused == modular and len(fused) > 0
-        pages.unpersist()
-        scans.unpersist()
-
-    def test_arrow_native_source_equals_jvm_scan(self, spark, tmp_path):
-        """The Arrow-native parquet path (python workers read their
-        row-group splits with pyarrow) must produce the identical relation
-        multiset as the JVM scan over the same files."""
-        from seq2rel_ds_spark.operators.mention import (
-            fused_relation_scan,
-            fused_relation_scan_arrow,
-        )
-        from seq2rel_ds_spark.sources import pages as pages_src
-
-        path = str(tmp_path / "pages")
-        pages_src.synthesize_pages(spark, 150, partitions=3).write.parquet(path)
-        d = pages_src.dictionary_df(spark)
-        dict_rows = [
-            (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
-        ]
-        jvm = sorted(
-            tuple(r)
-            for r in fused_relation_scan(
-                spark.read.parquet(path), dict_rows, pages_src.PREDICATES
-            ).collect()
-        )
-        arrow = sorted(
-            tuple(r)
-            for r in fused_relation_scan_arrow(
-                spark, path, dict_rows, pages_src.PREDICATES, batch_size=64
-            ).collect()
-        )
-        assert jvm == arrow and len(jvm) > 0
-
-    def test_fused_combine_partials_equal_instance_path(self, spark, tmp_path):
-        """The fused-combine flagship path (map-side partial triple counts in
-        the Python task, final merge in Catalyst) must produce the identical
-        canonical triple table — keys AND n_support — as the instance-row
-        path through the salted two-phase aggregate, on BOTH scan sources."""
-        from seq2rel_ds_spark.operators.mention import (
-            fused_relation_scan,
             fused_triple_partials,
             fused_triple_partials_arrow,
         )
@@ -80,33 +74,22 @@ class TestFusedRelationScan:
             canonicalize_from_partials,
             canonicalize_triples,
         )
-        from seq2rel_ds_spark.sources import pages as pages_src
-
-        path = str(tmp_path / "pages")
-        pages_src.synthesize_pages(spark, 150, partitions=3).write.parquet(path)
-        pages = spark.read.parquet(path)
-        d = pages_src.dictionary_df(spark)
-        dict_rows = [
-            (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
-        ]
 
         def table(df):
             return sorted(tuple(r) for r in df.collect())
 
         reference = table(
-            canonicalize_triples(
-                fused_relation_scan(pages, dict_rows, pages_src.PREDICATES), salt_buckets=8
-            )
+            canonicalize_triples(spark.createDataFrame(kg.rows, kg.schema), salt_buckets=8)
         )
         combine_jvm = table(
             canonicalize_from_partials(
-                fused_triple_partials(pages, dict_rows, pages_src.PREDICATES)
+                fused_triple_partials(spark.read.parquet(kg.path), kg.dict_rows, kg.preds)
             )
         )
         combine_arrow = table(
             canonicalize_from_partials(
                 fused_triple_partials_arrow(
-                    spark, path, dict_rows, pages_src.PREDICATES, batch_size=64
+                    spark, kg.path, kg.dict_rows, kg.preds, batch_size=64
                 )
             )
         )

@@ -53,18 +53,15 @@ class TestRelationalPlans:
         assert "Exchange" not in plan
 
     def test_fused_kg_single_shuffle(self, spark):
-        """The flagship plan: exactly one exchange pair (partial->final of
-        the salted aggregation) between scan and result."""
-        from seq2rel_ds_spark.operators.mention import fused_relation_scan
+        """The staged merge over relation rows: exactly one exchange pair
+        (partial->final of the salted aggregation) between its input and
+        the result."""
         from seq2rel_ds_spark.operators.triples import canonicalize_triples
-        from seq2rel_ds_spark.sources import pages as pages_src
 
-        pages = pages_src.synthesize_pages(spark, 20, partitions=2)
-        d = pages_src.dictionary_df(spark)
-        dict_rows = [
-            (r["surface"], r["uid"], r["label"], r["is_canonical"]) for r in d.collect()
-        ]
-        rel = fused_relation_scan(pages, dict_rows, pages_src.PREDICATES)
+        rows = [(f"u{i}", i % 3, f"S{i % 4}", "CAUSES", f"O{i % 5}") for i in range(40)]
+        rel = spark.createDataFrame(
+            rows, "url string, sent_idx int, subj_uid string, pred string, obj_uid string"
+        )
         plan = _plan(canonicalize_triples(rel, salt_buckets=8))
         # two-phase salted agg = exactly 2 exchanges (salted partial -> final)
         assert plan.count("Exchange") == 2
