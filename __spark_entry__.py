@@ -2109,8 +2109,11 @@ def q_triples_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     obj_uid, cnt) partials the stream merges; the fused page scan that
     production streams use is parity- and gate-audited separately
     (``partial_scan`` override).
-    Stream artifacts live in a session-lifetime temp dir (the returned
-    DataFrame lazily reads them; cleaning here would break collection)."""
+    Stream artifacts live in a temp dir removed at interpreter exit (the
+    returned DataFrame lazily reads them; cleaning here would break
+    collection)."""
+    import atexit
+    import shutil
     import tempfile
 
     from seq2rel_ds_spark.streaming.triples_stream import (
@@ -2141,6 +2144,7 @@ def q_triples_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base = tempfile.mkdtemp(prefix="gate_triples_stream_")
+    atexit.register(shutil.rmtree, base, True)
     src, inc, ck, compacted = (
         f"{base}/src",
         f"{base}/inc",
@@ -2181,13 +2185,16 @@ def q_sessions_stream_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     can fire under availableNow), so the oracle excludes per-user last
     sessions.  Event times are truncated to whole seconds by the operator
     (int(ts.timestamp())); the oracle mirrors floor(epoch(ts)).  Stream
-    artifacts live in a session-lifetime temp dir (the returned DataFrame
-    lazily reads them)."""
+    artifacts live in a temp dir removed at interpreter exit (the returned
+    DataFrame lazily reads them)."""
+    import atexit
+    import shutil
     import tempfile
 
     from seq2rel_ds_spark.streaming.sessions import streaming_sessions
 
     base = tempfile.mkdtemp(prefix="gate_sessions_stream_")
+    atexit.register(shutil.rmtree, base, True)
     src, out, ck = f"{base}/src", f"{base}/out", f"{base}/ck"
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
     # one consolidated input file -> one deterministic micro-batch (the
@@ -2234,6 +2241,8 @@ def q_crawl_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-minute buckets).  warc_ts = 2024-01-01T00:00Z + (doc_id % 600)
     minutes, lang = round-robin en/de/fr, so window boundaries and late
     arrivals are fully closed-form."""
+    import atexit
+    import shutil
     import tempfile
     import uuid
 
@@ -2256,6 +2265,7 @@ def q_crawl_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("lang"),
     )
     base = tempfile.mkdtemp(prefix="gate_crawl_stream_")
+    atexit.register(shutil.rmtree, base, True)
     src, ck = f"{base}/src", f"{base}/ck"
     for e in range(3):  # three file drops -> three micro-batches
         pages.filter(F.col("url").cast("long") % 3 == e).coalesce(1).write.mode(
@@ -2294,11 +2304,14 @@ def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates the per-stage row counts in SQL and pins the skip flags; the
     returned metrics come from real manifests/lineage files, so any resume
     bug changes the emitted values, not just an internal assertion."""
+    import atexit
+    import shutil
     import tempfile
 
     from seq2rel_ds_spark.plans.pipeline import Pipeline
 
     base = tempfile.mkdtemp(prefix="gate_pipeline_resume_")
+    atexit.register(shutil.rmtree, base, True)
     docs = _t(spark, sf_dir, "documents")
 
     def stage_filtered(outputs):

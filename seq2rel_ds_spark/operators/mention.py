@@ -458,18 +458,20 @@ def fused_triple_partials_arrow(
     batch_size: int = 20000,
 ) -> DataFrame:
     """Arrow-native + fused-combine flagship stage (the bench default):
-    python workers read their (file, row_group) splits directly with pyarrow
-    (one decode, no inbound IPC — sources/arrow_pages.py) and emit
-    pre-aggregated triple partials (no per-instance outbound IPC either).
-    The JVM's remaining work is scheduling plus a final merge over
-    O(distinct-triples x tasks) skinny rows."""
+    one Python task per core slot reads its balanced list of (file,
+    row_group) splits directly with pyarrow (one decode, no inbound IPC —
+    sources/arrow_pages.py) and emits pre-aggregated triple partials (no
+    per-instance outbound IPC either), one frame per batch.  The JVM's
+    remaining work is scheduling plus a final merge over
+    O(distinct-triples x batches) skinny rows."""
     from seq2rel_ds_spark.sources.arrow_pages import scan_parquet_python
 
     bc = spark.sparkContext.broadcast((list(dictionary_rows), dict(predicates)))
 
     # cloudpickle ships this dict inside the task closure, so every task
-    # unpickles an empty one: it holds one compiled processor per task
-    # (built on the task's first batch), not per worker process
+    # unpickles an empty one: it holds one compiled processor per task,
+    # built on the task's first batch and reused for every row group in the
+    # task's split list, so a scan builds at most defaultParallelism of them
     state: dict = {}
 
     def process(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:

@@ -6,33 +6,48 @@ and materializes it again in the Python worker — three passes over the
 bytes before the first line of user Python runs.  When the *consumer* of
 the scan is itself a Python stage (the fused triple-partial scan,
 ``fused_triple_partials_arrow``), that JVM round trip buys nothing: this
-source instead distributes ``(file, row_group)`` splits as plain rows and
-lets each Python worker read its split directly with ``pyarrow.parquet`` —
-one decode, zero inbound IPC.  The same pattern Petastorm / Ray Data / DL
+source instead hands each Python task a list of ``(file, row_group)``
+splits and lets it read them directly with ``pyarrow.parquet`` — one
+decode, zero inbound IPC.  The same pattern Petastorm / Ray Data / DL
 data loaders use.  It is the flagship's default scan whenever the pages
 are a parquet path (bench.py, perfbench); a DataFrame input takes the JVM
 scan (``fused_triple_partials``).
 
 Trade-offs:
-  * Catalyst sees only the split table — no automatic predicate pushdown or
-    column pruning into the scan; callers pass ``columns=`` (projection
-    pushdown) explicitly.
+  * Catalyst sees only a ``range`` of task ids — no automatic predicate
+    pushdown or column pruning into the scan; callers pass ``columns=``
+    (projection pushdown) explicitly.
   * No schema evolution / partition discovery beyond what the listing does.
   * Only worth it when the next stage is Python anyway; for relational
     consumers the JVM scan with full Catalyst integration wins.
 
-Scale notes: the split table is tiny (one row per row group), so Spark's
-scheduling, task retry, speculative execution, and the downstream shuffle
-machinery all still apply; split granularity = row groups, the same unit
-the JVM scan parallelizes by.  The split LISTING currently supports local
-paths only (rejected loudly otherwise — see ``list_row_groups``); the
-worker-side reader already goes through pyarrow, whose filesystem layer
-streams object-store ranges the same way the JVM reader does, so the
-object-store gap is the driver-side listing alone.
+One Python task per core slot.  A Python task has a fixed cost that does
+not depend on its input: measured on Python 3.11 / pyspark 4.1 (4 cores),
+pyspark's per-task ``importlib.invalidate_caches()`` (each of the worker's
+zipimporters re-reads its archive directory, spark-core's jar among them)
+took 0.12-0.25 s of CPU, and the daemon's ``gc.collect()`` after each task
+0.03-0.05 s even in an otherwise idle worker.  So the scan runs
+``n = min(splits, defaultParallelism)`` tasks over a JVM-only
+``spark.range(n, numPartitions=n)``: no Python task to build a split
+table and no shuffle to spread it.  Task ``i`` reads its list of row
+groups from a broadcast, balanced largest-first by the footer row counts.
+What this gives up: a task is a whole list of row groups, so a failed
+task retries, and a straggler is speculated, at that coarser unit, and a
+slow core keeps its share instead of the others stealing row groups from
+it; and ``defaultParallelism`` is read when the scan is built, so on a
+cluster executors that register later get no task of this scan.  Row
+groups stay the unit of balance and of reading.
+
+The split LISTING currently supports local paths only (rejected loudly
+otherwise — see ``list_row_groups``); the worker-side reader already goes
+through pyarrow, whose filesystem layer streams object-store ranges the
+same way the JVM reader does, so the object-store gap is the driver-side
+listing alone.
 """
 
 from __future__ import annotations
 
+import heapq
 from typing import Callable, Iterator, List, Optional
 
 import pandas as pd
@@ -40,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def list_row_groups(spark: SparkSession, path: str) -> List[tuple]:
-    """(file, row_group_index) split list for a parquet directory —
+    """(file, row_group_index, num_rows) split list for a parquet directory —
     driver-side metadata-only listing (footer reads, no data).
 
     Local filesystem paths only for now: the listing uses glob, so an
@@ -62,9 +77,24 @@ def list_row_groups(spark: SparkSession, path: str) -> List[tuple]:
     files = sorted(glob.glob(os.path.join(path.removeprefix("file://"), "*.parquet")))
     splits = []
     for f in files:
-        n = pq.ParquetFile(f).metadata.num_row_groups
-        splits.extend((f, g) for g in range(n))
+        meta = pq.ParquetFile(f).metadata
+        splits.extend(
+            (f, g, meta.row_group(g).num_rows) for g in range(meta.num_row_groups)
+        )
     return splits
+
+
+def _balance_splits(splits: List[tuple], n: int) -> List[List[tuple]]:
+    """Deal ``(file, row_group, num_rows)`` splits into ``n`` task lists,
+    largest first, each to the list with the fewest rows so far; each list
+    holds ``(file, row_group)`` pairs in file order."""
+    loads = [(0, i) for i in range(n)]
+    tasks: List[List[tuple]] = [[] for _ in range(n)]
+    for f, g, rows in sorted(splits, key=lambda s: -s[2]):
+        load, i = heapq.heappop(loads)
+        tasks[i].append((f, g))
+        heapq.heappush(loads, (load + rows, i))
+    return [sorted(t) for t in tasks]
 
 
 def scan_parquet_python(
@@ -76,8 +106,8 @@ def scan_parquet_python(
     batch_size: int = 20000,
 ) -> DataFrame:
     """Run ``process`` (a pandas-batch generator function) directly over the
-    parquet data, reading each (file, row_group) split with pyarrow inside
-    the Python worker.
+    parquet data: one Python task per core slot, each reading its
+    ``_balance_splits`` list of (file, row_group) splits with pyarrow.
 
     ``process`` receives pandas DataFrames of ``columns`` (projection pushed
     into the pyarrow reader) and yields output frames matching ``schema`` —
@@ -87,24 +117,27 @@ def scan_parquet_python(
     splits = list_row_groups(spark, path)
     if not splits:
         return spark.createDataFrame([], schema)
-    sdf = spark.createDataFrame(splits, "file string, row_group int")
-    sdf = sdf.repartition(len(splits))
+    sc = spark.sparkContext
+    n = min(len(splits), sc.defaultParallelism)
+    bc = sc.broadcast(_balance_splits(splits, n))
 
     def read_and_process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
         for pdf in batches:
-            for f, g in zip(pdf["file"], pdf["row_group"]):
-                pf = pq.ParquetFile(f)
-                # use_threads=False: each Python worker owns ~one core of the
-                # executor's budget already — pyarrow's default per-reader
-                # thread pool (os.cpu_count() threads PER worker) would
-                # oversubscribe the box N-fold at high parallelism, measured
-                # as 35% wall variance on steal-free 32-core legs
-                for rb in pf.iter_batches(
-                    batch_size=batch_size, row_groups=[int(g)], columns=columns,
-                    use_threads=False,
-                ):
-                    yield from process(rb.to_pandas())
+            for task in pdf["id"]:
+                for f, g in bc.value[int(task)]:
+                    pf = pq.ParquetFile(f)
+                    # use_threads=False: each Python worker owns ~one core of
+                    # the executor's budget already — pyarrow's default
+                    # per-reader thread pool (os.cpu_count() threads PER
+                    # worker) would oversubscribe the box N-fold at high
+                    # parallelism, measured as 35% wall variance on
+                    # steal-free 32-core legs
+                    for rb in pf.iter_batches(
+                        batch_size=batch_size, row_groups=[g], columns=columns,
+                        use_threads=False,
+                    ):
+                        yield from process(rb.to_pandas())
 
-    return sdf.mapInPandas(read_and_process, schema=schema)
+    return spark.range(n, numPartitions=n).mapInPandas(read_and_process, schema=schema)

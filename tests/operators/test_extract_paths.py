@@ -64,3 +64,12 @@ def test_corpus_parity_sample():
         title, sentences, _ = _compose_doc(i, entities)
         h = _render_html(title, sentences)
         assert extract_text_from_html(h) == _general(h)
+
+
+def test_fast_path_byte_check_agrees_with_regex():
+    """The hot path's translate-based check finds exactly the bytes
+    ``_FAST_UNSAFE`` finds: on every single byte and on ADVERSARIAL."""
+    from seq2rel_ds_spark.operators.extract import _FAST_UNSAFE, _has_fast_unsafe
+
+    for h in [bytes([b]) for b in range(256)] + ADVERSARIAL:
+        assert _has_fast_unsafe(h) == bool(_FAST_UNSAFE.search(h)), h[:60]

@@ -3,6 +3,7 @@ web-KG pipeline (incl. checkpoint-resume idempotency) / streaming."""
 
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -579,7 +580,19 @@ class TestStatefulStreaming:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # availableNow with the default processing-time timeout never ends
+        # by itself, and processAllAvailable() never returns either: every
+        # trigger runs another no-data batch to poll for timeouts.  Wait
+        # until the reported batches have taken every input row (progress is
+        # reported after the sink commits), then stop the query so it does
+        # not keep running empty micro-batches in the shared session.
+        deadline = time.monotonic() + 120
+        try:
+            while sum(p["numInputRows"] for p in q.recentProgress) < len(rows):
+                assert time.monotonic() < deadline, q.recentProgress
+                time.sleep(0.2)
+        finally:
+            q.stop()
         got = spark.read.parquet(out).collect()
         # only CLOSED sessions emit (user 1's first session closed by the
         # 2h-later event); open sessions remain in state
