@@ -524,7 +524,13 @@ def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle restates the same cut and recomputes the values from full
     sets, so a wrong implementation that filtered the intersection too
     would hash-mismatch.  Recall loss is only pairs whose EVERY shared
-    shingle is boilerplate, which sit far below the 0.6 threshold."""
+    shingle is boilerplate, which sit far below the 0.6 threshold.
+
+    The shingles are computed once (one scan, one reused exchange): a
+    pair's shared rare shingles are counted by the candidate self-join
+    itself and its shared footer shingles by intersecting the two docs'
+    stop-shingle arrays, so no stage joins the pairs back against the
+    shingle table."""
     from seq2rel_ds_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents").select(

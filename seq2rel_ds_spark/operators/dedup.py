@@ -13,7 +13,7 @@ Scale notes (the design constraints, not afterthoughts):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -100,68 +100,58 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All document pairs (a < b) with shingle-set Jaccard >= threshold.
 
-    Candidate generation is a shingle-bucket self-join; intersection counts
-    come from a single groupBy, union sizes from two joins.
+    Candidate generation is a shingle-bucket self-join, and no stage joins
+    the pairs back against shingles.  With R the rare and S the stop
+    shingles, ``n_inter = |A∩B∩R| + |A∩B∩S|``: the first term is the row
+    count of the self-join over rare shingles (its ``groupBy(id_a, id_b)``
+    also dedups the candidates), the second ``size(array_intersect(...))``
+    over each doc's small stop-shingle array, collected in the per-doc
+    aggregate that also counts the set size.
 
     ``max_shingle_df`` (0 = off) is the scale knob: shingles appearing in
-    more than this many documents are excluded from CANDIDATE GENERATION
-    ONLY (the classic stop-shingle cut — a shingle shared by k docs
-    contributes k^2 join rows).  Intersection/union counts still use the
-    full shingle sets, so reported Jaccard stays exact; the only recall
-    loss is pairs whose every shared shingle is a stop-shingle.
+    more than this many documents (a ``count(*)`` window per shingle) are
+    stop shingles, excluded from CANDIDATE GENERATION ONLY (the classic
+    stop-shingle cut — a shingle shared by k docs contributes k^2 join
+    rows).  Both terms cover the full shingle sets, so reported Jaccard
+    stays exact; the only recall loss is pairs whose every shared shingle
+    is a stop shingle.  With the cut off, the stop arrays are empty.
     """
-    sh = docs.select(
-        F.col(id_col).alias("id"), tokens_for_shingles(F.col(text_col)).alias("_toks")
-    ).select("id", F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("shingle"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    if max_shingle_df > 0:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("shingle")
+    # the explicit non-null filter sits under every branch, so all of them
+    # read one reused shingle exchange (an inferred filter pushed under
+    # only some branches broke that reuse)
+    sh = (
+        docs.select(
+            F.col(id_col).alias("id"), tokens_for_shingles(F.col(text_col)).alias("_toks")
         )
-        cand_src = sh.join(rare, "shingle", "left_semi")
-        a, b = cand_src.alias("a"), cand_src.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
+        .select("id", F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("shingle"))
+        .filter(F.col("id").isNotNull() & F.col("shingle").isNotNull())
+        .withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
+    )
+    rare = (F.col("df") <= max_shingle_df) if max_shingle_df > 0 else F.lit(True)
+    per_doc = sh.groupBy("id").agg(
+        F.count("*").alias("sz"),
+        F.collect_list(F.when(~rare, F.col("shingle"))).alias("stops"),
+    )
+    a, b = sh.filter(rare).alias("a"), sh.filter(rare).alias("b")
+    n_rare = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
         )
-        sh_a = sh.select(F.col("id").alias("id_a"), F.col("shingle").alias("sh_a"))
-        sh_b = sh.select(F.col("id").alias("_idb"), F.col("shingle").alias("sh_b"))
-        inter = (
-            cand.join(sh_a, "id_a")
-            .join(sh_b, (F.col("id_b") == F.col("_idb")) & (F.col("sh_a") == F.col("sh_b")))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-    else:
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count("*").alias("n_inter"))
-        )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count("*").alias("n_rare"))
+    )
+
+    def side(s: str) -> DataFrame:
+        return per_doc.select(*(F.col(c).alias(f"{c}_{s}") for c in ("id", "sz", "stops")))
+
+    n_inter = F.col("n_rare") + F.size(F.array_intersect("stops_a", "stops_b"))
+    jaccard = F.round(n_inter / (F.col("sz_a") + F.col("sz_b") - n_inter), 4)
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")), 4
-            ),
-        )
+        n_rare.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select("id_a", "id_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 

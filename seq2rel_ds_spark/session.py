@@ -10,6 +10,17 @@ The generated-class cache holds 4096 entries, not Spark's 100, so a repeated
 sweep over the registry reuses its compiled code. One sweep uses about 285
 generated classes over the 24 perfbench queries and about 1,000 over all 80
 registry queries at sf0.01; with 100 entries every sweep compiled them again.
+
+PySpark's DataFrame debugging is off. With it on, every wrapped PySpark
+call (each ``functions.*``, Column and DataFrame method) also looks up the
+active session, reads ``spark.sql.stackTracesInDataFrameContext`` and sets
+and clears the JVM-side call-site origin: about half of the 9.6k py4j round
+trips one 24-query sweep made to build its DataFrames. The cost is that a
+DataFrame error no longer names the Python ``file:line`` of the call that
+built the failing expression. A caller who wants that back passes
+``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` as
+``extra_conf``. It is a static setting, and PySpark reads it once per
+process, so it only takes effect when the first session is built.
 """
 
 from __future__ import annotations
@@ -66,6 +77,9 @@ def get_spark(
         # 4096 holds the whole registry with headroom. Static conf: it only
         # takes effect when the JVM's first session is built here.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # No Python call-site capture around every PySpark API call (see the
+        # module docstring): halves the py4j round trips of building a plan.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     # Only force the master when not already running under spark-submit.

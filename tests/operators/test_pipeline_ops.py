@@ -46,6 +46,54 @@ class TestDedup:
         assert (0, 2) in pairs and 0.5 <= pairs[(0, 2)] < 1.0
         assert not any(3 in p for p in pairs)
 
+    @pytest.mark.parametrize("max_shingle_df", [2, 0])
+    def test_ngram_jaccard_matches_brute_force(self, spark, max_shingle_df):
+        """Every pair the stop-shingle cut keeps (all pairs sharing a shingle
+        when the cut is off) with its exact Jaccard over the FULL bigram
+        sets, footer and mid-frequency stop shingles included."""
+        import re
+        from itertools import combinations
+
+        from seq2rel_ds_spark.operators.dedup import ngram_jaccard_pairs
+
+        texts = [
+            "the cat sat on the mat",
+            "the cat sat on a rug",
+            "a dog ran in the park",
+            "the  Dog ran in the yard",
+            "alpha beta gamma delta",
+            "alpha beta epsilon zeta",
+            "alpha beta eta theta",
+            "completely unrelated words here",
+            "solo",
+        ]
+        # every doc ends with the same footer: its bigrams have df = n_docs
+        rows = [(i, t + " shared legal footer") for i, t in enumerate(texts)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+        toks = {i: " ".join(t.split()).lower().split(" ") for i, t in rows}
+        sets = {i: {" ".join(w[k : k + 2]) for k in range(len(w) - 1)} for i, w in toks.items()}
+        df = {s: sum(s in v for v in sets.values()) for v in sets.values() for s in v}
+        expected = {}
+        for a, b in combinations(sorted(sets), 2):
+            shared = sets[a] & sets[b]
+            if any(max_shingle_df == 0 or df[s] <= max_shingle_df for s in shared):
+                expected[(a, b)] = len(shared) / len(sets[a] | sets[b])
+
+        out = ngram_jaccard_pairs(docs, threshold=0.0, n=2, max_shingle_df=max_shingle_df)
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        assert got.keys() == expected.keys()
+        for pair, j in expected.items():
+            assert got[pair] == pytest.approx(j, abs=5e-5), pair
+        if max_shingle_df:
+            # docs 4-6 share only stop shingles ("alpha beta", df 3, and the footer)
+            assert (4, 5) not in got
+            # one shingle pass: every branch reads one reused shingle exchange
+            final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+            assert len(re.findall(r"^[\s:|+-]*Generate ", final, re.M)) == 1, final
+        else:
+            assert (4, 5) in got
+
     def test_minhash_lsh_matches_exact_on_high_threshold(self, spark, docs_df):
         from seq2rel_ds_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 

@@ -23,3 +23,13 @@ def test_generated_classes_are_reused_across_a_repeated_sweep(spark):
     assert c1 - c0 > 100
     assert c2 - c1 == 0
     assert second == first
+
+
+def test_dataframe_debugging_is_off(spark):
+    # with it on, every PySpark API call also captures its Python call site
+    # over py4j; the flag is cached per process, so re-read it here
+    from pyspark.errors import utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    utils._enable_debugging_cache = None
+    assert utils.is_debugging_enabled() is False
